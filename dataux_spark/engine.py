@@ -159,8 +159,13 @@ class Engine:
     def create_source(self, name: str, conf: dict) -> Source:
         """Runtime `CREATE source ... WITH {json}` (reference README.md:76-86,
         SqlCreate dispatch at mysql_handler.go:253-260)."""
+
+        def setting(key: str):
+            # a truthy top-level key wins over the `settings` sub-object
+            return conf.get(key) or conf.get("settings", {}).get(key)
+
         kind = conf.get("type", "parquet")
-        path = conf.get("path") or conf.get("settings", {}).get("path")
+        path = setting("path")
         if kind in ("parquet", "file", "files"):
             src: Source = ParquetDirSource(name, path)
         elif kind == "csv":
@@ -174,29 +179,25 @@ class Engine:
 
             src = MongoStyleSource(
                 name,
-                conf.get("endpoints") or conf.get("settings", {}).get("endpoints") or {},
-                push_log_dir=conf.get("push_log_dir")
-                or conf.get("settings", {}).get("push_log_dir"),
+                setting("endpoints") or {},
+                push_log_dir=setting("push_log_dir"),
+                partitions=setting("partitions"),
             )
         elif kind in ("datastore", "gcd"):
             from dataux_spark.sources.datastore_style import DatastoreStyleSource
 
             src = DatastoreStyleSource(
                 name,
-                conf.get("endpoints") or conf.get("settings", {}).get("endpoints") or {},
-                push_log_dir=conf.get("push_log_dir")
-                or conf.get("settings", {}).get("push_log_dir"),
-                entity_keys=conf.get("entity_keys")
-                or conf.get("settings", {}).get("entity_keys"),
+                setting("endpoints") or {},
+                push_log_dir=setting("push_log_dir"),
+                entity_keys=setting("entity_keys"),
             )
         elif kind in ("cassandra", "cql"):
             from dataux_spark.infer import TableMeta
             from dataux_spark.sources.cassandra_style import CassandraStyleSource
 
             tables = {}
-            for t, tc in (
-                conf.get("tables") or conf.get("settings", {}).get("tables") or {}
-            ).items():
+            for t, tc in (setting("tables") or {}).items():
                 tables[t] = (
                     tc["url"],
                     TableMeta(
@@ -206,51 +207,36 @@ class Engine:
                         clustering_keys=list(tc.get("clustering_keys") or []),
                     ),
                 )
-            src = CassandraStyleSource(
-                name, tables,
-                push_log_dir=conf.get("push_log_dir")
-                or conf.get("settings", {}).get("push_log_dir"),
-            )
+            src = CassandraStyleSource(name, tables, push_log_dir=setting("push_log_dir"))
         elif kind in ("bigtable", "bt"):
             from dataux_spark.sources.bigtable_style import FamilyTableSource
 
             src = FamilyTableSource(
                 name,
-                conf.get("physical") or conf.get("settings", {}).get("physical") or {},
-                rowkey=conf.get("rowkey")
-                or conf.get("settings", {}).get("rowkey") or "rowkey",
-                sep=conf.get("sep") or conf.get("settings", {}).get("sep") or ":",
+                setting("physical") or {},
+                rowkey=setting("rowkey") or "rowkey",
+                sep=setting("sep") or ":",
             )
         elif kind in ("kube", "rest"):
             from dataux_spark.sources.rest import RestJsonSource
 
-            src = RestJsonSource(
-                name, conf.get("endpoints") or conf.get("settings", {}).get("endpoints") or {}
-            )
+            src = RestJsonSource(name, setting("endpoints") or {})
         elif kind == "lytics":
             from dataux_spark.sources.lytics_style import LyticsStyleSource
 
             src = LyticsStyleSource(
-                name,
-                conf.get("endpoints") or conf.get("settings", {}).get("endpoints") or {},
-                push_log_dir=conf.get("push_log_dir")
-                or conf.get("settings", {}).get("push_log_dir"),
+                name, setting("endpoints") or {}, push_log_dir=setting("push_log_dir")
             )
         elif kind in ("elasticsearch", "es"):
             from dataux_spark.sources.es_style import EsStyleRestSource
 
             src = EsStyleRestSource(
-                name,
-                conf.get("endpoints") or conf.get("settings", {}).get("endpoints") or {},
-                push_log_dir=conf.get("push_log_dir")
-                or conf.get("settings", {}).get("push_log_dir"),
+                name, setting("endpoints") or {}, push_log_dir=setting("push_log_dir")
             )
         elif kind in ("passthrough", "duckdb", "bigquery"):
             # FULL-tier remote engine (reference BigQuery backend)
             src = DuckDBPassthroughSource(
-                name,
-                conf.get("tables") or conf.get("settings", {}).get("tables") or {},
-                db_path=conf.get("db_path") or conf.get("settings", {}).get("db_path"),
+                name, setting("tables") or {}, db_path=setting("db_path")
             )
         else:
             raise QueryError(f"unknown source type {kind!r}")
@@ -290,7 +276,12 @@ class Engine:
             elif isinstance(src, ParquetDirSource):
                 out[name] = {"type": "parquet", "path": src.path}
             elif isinstance(src, MongoStyleSource):
-                out[name] = _opt({"type": "mongo", "endpoints": dict(src.endpoints)})
+                c = {"type": "mongo", "endpoints": dict(src.endpoints)}
+                if src.partitions:
+                    c["partitions"] = {
+                        t: [col, list(bounds)] for t, (col, bounds) in src.partitions.items()
+                    }
+                out[name] = _opt(c)
             elif isinstance(src, EsStyleRestSource):
                 out[name] = _opt({"type": "elasticsearch", "endpoints": dict(src.endpoints)})
             elif isinstance(src, DatastoreStyleSource):
@@ -775,7 +766,11 @@ class Engine:
     def _owning_source(self, table: str):
         """The registered source that discovered `table`, if any — DML on
         its tables must go through that source's mutator, never a shadow
-        temp-view copy."""
+        temp-view copy. It also gets every pushdown offer regardless of
+        tier: each backend decides per shape (reference: even the
+        filters-only Mongo tier pushes count(*) natively via query.Count(),
+        backends/mongo/mgo_results.go:112-119), and the Source hooks
+        decline by default, so scan-only sources fall through to Spark."""
         t = table.lower()
         for s in self.sources.values():
             if t in {x.lower() for x in s.tables()}:
@@ -962,7 +957,7 @@ class Engine:
         m = self._AGG_SHAPE_RE.match(sql)
         if not m:
             return None
-        src = self._agg_capable_source(m.group("table"))
+        src = self._owning_source(m.group("table"))
         if src is None:
             return None
         table = m.group("table")
@@ -1029,7 +1024,7 @@ class Engine:
         m = self._TOPK_SHAPE_RE.match(sql)
         if not m:
             return None
-        src = self._agg_capable_source(m.group("table"))
+        src = self._owning_source(m.group("table"))
         if src is None:
             return None
         cols = [c.strip().strip("`") for c in m.group("items").split(",")]
@@ -1070,17 +1065,6 @@ class Engine:
             op = {"==": "=", "<>": "!="}.get(cm.group(2), cm.group(2))
             filters.append((cm.group(1), op, val))
         return filters
-
-    def _agg_capable_source(self, table: str):
-        """The owning source gets the offer regardless of tier — each
-        backend decides per-shape (reference: even the filters-only Mongo
-        tier pushes count(*) natively via query.Count(),
-        backends/mongo/mgo_results.go:112-119). Source.execute_agg declines
-        by default, so scan-only sources simply fall through to Spark."""
-        for s in self.sources.values():
-            if table.lower() in {t.lower() for t in s.tables()}:
-                return s
-        return None
 
     def _literal_dotted_columns(self) -> set[str]:
         """Columns whose names literally contain dots (flattened sources —
@@ -1200,7 +1184,7 @@ class Engine:
         field = m.group(1).strip("`")
         size = int(m.group(2)) if m.group(2) else 10
         table, where = m.group(3).strip("`"), m.group(4)
-        src = self._agg_capable_source(table)
+        src = self._owning_source(table)
         if src is not None:
             filters = self._parse_simple_where(where)
             if filters is not None:

@@ -12,44 +12,42 @@ server-side ordering to CLUSTERING keys, which is what TableMeta encodes
 (infer.TableMeta.can_push_order). Key metadata comes from the keyspace
 system tables at discovery time (source.go:150-262).
 
-Spark-first: a Spark 4 Python DataSource. pushFilters() consults the
-table's key metadata (shipped to the planning worker as options) and keeps
-only the CQL-expressible key predicates; Catalyst plans everything it
-returns as a residual Filter — the polyfill. ORDER BY negotiation is a
-Source-level contract: `can_push_order(cols)` says whether the scan could
-serve the order natively (clustering keys); Spark's own Sort node is the
-always-correct polyfill either way, so the negotiation is observable in
-the push log while correctness never depends on it.
+The table's key columns ship to the planning worker as the `key_cols` scan
+option. ORDER BY negotiation is a Source-level contract:
+`can_push_order(cols)` says whether the scan could serve the order natively
+(clustering keys); Spark's own Sort node is the always-correct polyfill
+either way, so the negotiation is observable in the push log while
+correctness never depends on it.
 
-Scale: a partition-key equality scan hits one Cassandra partition — the
-pushed filters execute inside the read, so the engine never transfers
-non-matching partitions. ``partitions()`` would map token ranges to input
-partitions at cluster scale (one task per vnode range).
+Scale: a partition-key equality scan hits one Cassandra partition; at
+cluster scale the scan would map token ranges to input partitions (one task
+per vnode range).
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
-    InputPartition,
     LessThan,
     LessThanOrEqual,
 )
 
 from dataux_spark.infer import TableMeta, infer_from_documents
-from dataux_spark.sources.base import PushdownTier, Source
-from dataux_spark.sources.rest import _fetch_json, _flatten
+from dataux_spark.sources.base import PushdownTier
+from dataux_spark.sources.docstore import DocStoreSource, split_filters
 
 _RANGE = (GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
 _NUMERIC = (T.LongType, T.IntegerType, T.DoubleType, T.FloatType, T.ShortType, T.DecimalType)
+
+
+def _numeric_cols(schema) -> set[str]:
+    return {f.name for f in schema.fields if isinstance(f.dataType, _NUMERIC)}
 
 
 def _acceptable(f, keys: set[str], numeric_cols: set[str]) -> bool:
@@ -67,90 +65,12 @@ def _acceptable(f, keys: set[str], numeric_cols: set[str]) -> bool:
     return False
 
 
-def _eval(f, doc):
-    v = doc.get(f.attribute[0])
-    if v is None:
-        return None
-    if isinstance(f, EqualTo):
-        return v == f.value
-    if isinstance(f, GreaterThan):
-        return v > f.value
-    if isinstance(f, GreaterThanOrEqual):
-        return v >= f.value
-    if isinstance(f, LessThan):
-        return v < f.value
-    if isinstance(f, LessThanOrEqual):
-        return v <= f.value
-    return None
-
-
-class CassandraStyleReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self._schema = schema
-        self._url = options["url"]
-        self._qid = options.get("qid", self._url)
-        self._log_dir = options.get("push_log_dir")
-        self._keys = set(json.loads(options.get("key_cols", "[]")))
-        self._pushed = []
-
-    def pushFilters(self, filters):
-        numeric = {
-            f.name for f in self._schema.fields if isinstance(f.dataType, _NUMERIC)
-        }
-        accepted, residual = [], []
-        for f in filters:
-            (accepted if _acceptable(f, self._keys, numeric) else residual).append(f)
-        self._pushed = accepted
-        if self._log_dir:
-            import os
-
-            with open(os.path.join(self._log_dir, f"{self._qid}.json"), "w") as fh:
-                json.dump(
-                    {"pushed": [repr(f) for f in accepted],
-                     "residual": [repr(f) for f in residual]},
-                    fh,
-                )
-        return residual
-
-    def partitions(self):
-        # The reader lives across queries and pushFilters() only runs when
-        # the query has candidate filters — consume-and-clear here and ship
-        # the pushed set inside the partition so read() can never see a
-        # previous query's filters (see es_style.EsStyleReader.partitions).
-        pushed, self._pushed = self._pushed, []
-        return [InputPartition((0, pushed))]
-
-    def read(self, partition):
-        _, pushed = partition.value
-        docs = _fetch_json(self._url)
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        cols = [f.name for f in self._schema.fields]
-        for d in docs:
-            if all(_eval(f, d) is True for f in pushed):
-                yield tuple(d.get(c) for c in cols)
-
-
-class CassandraStyleDataSource(DataSource):
-    @classmethod
-    def name(cls):
-        return "dataux_cass"
-
-    def schema(self):
-        docs = _fetch_json(self.options["url"])
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        return infer_from_documents(docs)
-
-    def reader(self, schema):
-        return CassandraStyleReader(schema, self.options)
-
-
-class CassandraStyleSource(Source):
+class CassandraStyleSource(DocStoreSource):
     """name → {table: (url, TableMeta)}; key metadata gates what pushes."""
 
+    format = "dataux_cass"
     tier = PushdownTier.KEY_FILTERS
     default_limit = 5000  # reference cassandra page size (SURVEY §2.5)
-    fresh_scan_per_query = True
-    _registered_sessions: set[int] = set()
 
     def __init__(
         self,
@@ -158,23 +78,24 @@ class CassandraStyleSource(Source):
         tables: dict[str, tuple[str, TableMeta]],
         push_log_dir: str | None = None,
     ):
-        self.name = name
+        super().__init__(name, {t: url for t, (url, _) in tables.items()}, push_log_dir)
         self._tables = dict(tables)
-        self.push_log_dir = push_log_dir
-
-    @classmethod
-    def _ensure_format(cls, spark: SparkSession) -> None:
-        key = id(spark)
-        if key not in cls._registered_sessions:
-            spark.dataSource.register(CassandraStyleDataSource)
-            cls._registered_sessions.add(key)
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-
-    def tables(self) -> list[str]:
-        return list(self._tables)
 
     def meta(self, table: str) -> TableMeta:
         return self._tables[table][1]
+
+    def _key_cols(self, table: str) -> list[str]:
+        meta = self.meta(table)
+        return meta.partition_keys + meta.clustering_keys
+
+    @classmethod
+    def split_pushable(cls, filters, schema, options):
+        keys = set(json.loads(options.get("key_cols", "[]")))
+        numeric = _numeric_cols(schema)
+        return split_filters(filters, lambda f: _acceptable(f, keys, numeric))
+
+    def _scan_options(self, table):
+        return {"key_cols": json.dumps(self._key_cols(table))}
 
     def can_push_order(self, table: str, cols: list[str]) -> bool:
         """ORDER BY negotiation (sql_to_cql.go:570-600): servable natively
@@ -182,99 +103,43 @@ class CassandraStyleSource(Source):
         is the polyfill (needsOrderByPolyFill)."""
         return self.meta(table).can_push_order(cols)
 
-    def execute_topk(self, spark, table, cols, order, limit, filters):
+    def _declines_topk(self, table, order, filters, docs) -> bool:
         """CQL ORDER BY … LIMIT is servable ONLY when every order column
         is a clustering key AND every predicate is key-expressible
         (sql_to_cql.go:396-408,500-600) — anything else declines into the
         engine's TakeOrderedAndProject polyfill, the needsOrderByPolyFill
         path made concrete."""
-        if table not in self._tables:
-            return None
-        meta = self.meta(table)
-        if not meta.can_push_order([c for c, _ in order]):
-            return None
-        keys = set(meta.partition_keys + meta.clustering_keys)
+        if not self.can_push_order(table, [c for c, _ in order]):
+            return True
         # cheap gates FIRST — a decline must not cost a collection fetch
         # (the polyfill will fetch anyway; fetching here would double I/O)
-        for col, _op, _val in filters:
-            if col not in keys:
-                return None
-        docs = None
-        if any(op != "=" for _c, op, _v in filters):
-            # the numeric-key gate consults the COLUMN's discovered type
-            # (the same numeric set the pushFilters path derives from the
-            # schema), not the literal's Python type — a numeric literal
-            # against a string key column must decline (reference rule
-            # :552-556). Only range predicates need the schema sample.
-            url, _ = self._tables[table]
-            docs = _fetch_json(url)
-            docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-            schema = infer_from_documents(docs, sample_n=30)
-            numeric_cols = {
-                f.name for f in schema.fields if isinstance(f.dataType, _NUMERIC)
-            }
-            for col, op, _val in filters:
-                if op != "=" and col not in numeric_cols:
-                    return None  # ranges only on numeric key columns (:552-556)
-        if docs is None:
-            url, _ = self._tables[table]
-            docs = _fetch_json(url)
-            docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        from dataux_spark.sources.base import topk_documents
-        if self.push_log_dir:
-            import os
-
-            with open(
-                os.path.join(self.push_log_dir, f"{self.name}.{table}.topk.json"), "w"
-            ) as fh:
-                json.dump({"sort": [[c, d] for c, d in order], "limit": limit,
-                           "filters": [[c, o, v] for c, o, v in filters]}, fh)
-        return topk_documents(spark, docs, cols, order, limit, filters)
-
-    def load(self, spark: SparkSession, table: str) -> DataFrame:
-        if table not in self._tables:
-            raise KeyError(f"unknown table {table!r} in source {self.name!r}")
-        url, meta = self._tables[table]
-        self._ensure_format(spark)
-        key_cols = meta.partition_keys + meta.clustering_keys
-        reader = (
-            spark.read.format("dataux_cass")
-            .option("url", url)
-            .option("qid", f"{self.name}.{table}")
-            .option("key_cols", json.dumps(key_cols))
-        )
-        if self.push_log_dir:
-            reader = reader.option("push_log_dir", self.push_log_dir)
-        return reader.load()
+        keys = set(self._key_cols(table))
+        if any(col not in keys for col, _op, _val in filters):
+            return True
+        ranged = [col for col, op, _val in filters if op != "="]
+        if not ranged:
+            return False
+        # the numeric-key gate consults the COLUMN's discovered type (the
+        # same numeric set split_pushable derives from the schema), not
+        # the literal's Python type — a numeric literal against a string
+        # key column must decline (reference rule :552-556). Only range
+        # predicates need the schema sample.
+        numeric = _numeric_cols(infer_from_documents(docs(), sample_n=self.schema_sample))
+        return any(col not in numeric for col in ranged)
 
     # ------------------------------------------------------------- writes
 
     def writable(self) -> bool:
         # like the mongo-style tier, only file://-backed fixtures mutate
-        return all(u.startswith("file://") for u, _ in self._tables.values())
+        return all(u.startswith("file://") for u in self.endpoints.values())
 
     def mutator(self, spark: SparkSession, table: str):
         """CQL write semantics (reference sql_to_cql.go:236-394: CreateMutator
         builds a prepared per-row upsert keyed by the PRIMARY KEY; there is
         no append-duplicate in Cassandra — INSERT of an existing key
-        replaces the row). Delete-by-expression mirrors DeleteExpression
-        (:376-394)."""
+        replaces the row, and the key is the table's partition+clustering
+        columns, never the caller's). Delete-by-expression mirrors
+        DeleteExpression (:376-394)."""
         if table not in self._tables:
             return None
-        url, meta = self._tables[table]
-        if not url.startswith("file://"):
-            return None
-        from dataux_spark.sources.mongo_style import _DocMutator
-
-        pk = meta.partition_keys + meta.clustering_keys
-
-        class _CqlMutator(_DocMutator):
-            def put(self, batch, keys):
-                # primary-key upsert ALWAYS — plain INSERT is an upsert in
-                # CQL, and the key is the table's partition+clustering
-                # columns, never the caller's (the engine's generic
-                # first-insert-column fallback would key an UPSERT on the
-                # partition column alone and wipe sibling clustering rows)
-                return super().put(batch, pk)
-
-        return _CqlMutator(spark, url[len("file://"):])
+        return self._doc_mutator(spark, table, self._key_cols(table))

@@ -9,138 +9,36 @@ that INEQUALITY FILTERS MAY TARGET ONLY ONE PROPERTY per query (the native
 API rejects a second inequality property; the walker's "datastore only
 allows 1, warn" note at :467). IN/LIKE/EXISTS have no native form.
 
-Spark-first: a Spark 4 Python DataSource. Catalyst never offers a
-top-level OR as a V2 filter (it stays a residual automatically — the no-OR
-constraint is structural), so the walker-visible negotiation is: accept
-EqualTo and range filters, but once ranges span a second property, decline
-the later property's ranges into the residual; decline IN/strings/null
-checks/NOT entirely. Everything declined is Catalyst's residual Filter —
-the polyfill.
-
-Scale: same contract as the other REST-shaped tiers — accepted filters
-execute inside the read (the native Query analog), so only matching
-entities transfer; partitions() would map key ranges at cluster scale.
+Catalyst never offers a top-level OR as a V2 filter (it stays a residual
+automatically — the no-OR constraint is structural), so the walker-visible
+negotiation is: accept EqualTo and range filters, but once ranges span a
+second property, decline the later property's ranges into the residual;
+decline IN/strings/null checks/NOT entirely.
 """
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
-    InputPartition,
     LessThan,
     LessThanOrEqual,
 )
 
-from dataux_spark.infer import infer_from_documents
-from dataux_spark.sources.base import PushdownTier, Source
-from dataux_spark.sources.rest import _fetch_json, _flatten
+from dataux_spark.sources.base import PushdownTier
+from dataux_spark.sources.docstore import DocStoreSource
 
 _RANGE = (GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
 
 
-def _split(filters):
-    """Datastore accept rule: = on any property; ranges on AT MOST ONE
-    property (first seen wins — the native planner's single-inequality-
-    property restriction); nothing else."""
-    accepted, residual = [], []
-    ineq_prop: str | None = None
-    for f in filters:
-        if isinstance(f, EqualTo) and len(f.attribute) == 1:
-            accepted.append(f)
-        elif isinstance(f, _RANGE) and len(f.attribute) == 1:
-            prop = f.attribute[0]
-            if ineq_prop is None or ineq_prop == prop:
-                ineq_prop = prop
-                accepted.append(f)
-            else:
-                residual.append(f)  # second inequality property → polyfill
-        else:
-            residual.append(f)
-    return accepted, residual
-
-
-def _eval(f, doc):
-    v = doc.get(f.attribute[0])
-    if v is None:
-        return None
-    if isinstance(f, EqualTo):
-        return v == f.value
-    if isinstance(f, GreaterThan):
-        return v > f.value
-    if isinstance(f, GreaterThanOrEqual):
-        return v >= f.value
-    if isinstance(f, LessThan):
-        return v < f.value
-    if isinstance(f, LessThanOrEqual):
-        return v <= f.value
-    return None
-
-
-class DatastoreStyleReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self._schema = schema
-        self._url = options["url"]
-        self._qid = options.get("qid", self._url)
-        self._log_dir = options.get("push_log_dir")
-        self._pushed = []
-
-    def pushFilters(self, filters):
-        accepted, residual = _split(list(filters))
-        self._pushed = accepted
-        if self._log_dir:
-            import os
-
-            with open(os.path.join(self._log_dir, f"{self._qid}.json"), "w") as fh:
-                json.dump(
-                    {"pushed": [repr(f) for f in accepted],
-                     "residual": [repr(f) for f in residual]},
-                    fh,
-                )
-        return residual
-
-    def partitions(self):
-        # consume-and-clear; see es_style.EsStyleReader.partitions
-        pushed, self._pushed = self._pushed, []
-        return [InputPartition((0, pushed))]
-
-    def read(self, partition):
-        _, pushed = partition.value
-        docs = _fetch_json(self._url)
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        cols = [f.name for f in self._schema.fields]
-        for d in docs:
-            if all(_eval(f, d) is True for f in pushed):
-                yield tuple(d.get(c) for c in cols)
-
-
-class DatastoreStyleDataSource(DataSource):
-    @classmethod
-    def name(cls):
-        return "dataux_datastore"
-
-    def schema(self):
-        docs = _fetch_json(self.options["url"])
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        return infer_from_documents(docs)
-
-    def reader(self, schema):
-        return DatastoreStyleReader(schema, self.options)
-
-
-class DatastoreStyleSource(Source):
+class DatastoreStyleSource(DocStoreSource):
     """name → {kind: url}; each kind scans through the KV-query reader."""
 
+    format = "dataux_datastore"
     tier = PushdownTier.KEY_FILTERS
     default_limit = 1000  # reference datastore page size (SURVEY §2.5)
-    fresh_scan_per_query = True
-    _registered_sessions: set[int] = set()
 
     def __init__(
         self,
@@ -149,12 +47,44 @@ class DatastoreStyleSource(Source):
         push_log_dir: str | None = None,
         entity_keys: dict[str, str] | None = None,
     ):
-        self.name = name
-        self.endpoints = dict(endpoints)
-        self.push_log_dir = push_log_dir
+        super().__init__(name, endpoints, push_log_dir)
         # kind -> entity key property; a kind with a declared key accepts
         # DML (the reference datastore mutator addresses entities by key)
         self.entity_keys = dict(entity_keys or {})
+
+    @classmethod
+    def split_pushable(cls, filters, schema, options):
+        """Datastore accept rule: = on any property; ranges on AT MOST ONE
+        property (first seen wins — the native planner's single-inequality-
+        property restriction); nothing else."""
+        accepted, residual = [], []
+        ineq_prop: str | None = None
+        for f in filters:
+            if isinstance(f, EqualTo) and len(f.attribute) == 1:
+                accepted.append(f)
+            elif isinstance(f, _RANGE) and len(f.attribute) == 1:
+                prop = f.attribute[0]
+                if ineq_prop is None or ineq_prop == prop:
+                    ineq_prop = prop
+                    accepted.append(f)
+                else:
+                    residual.append(f)  # second inequality property → polyfill
+            else:
+                residual.append(f)
+        return accepted, residual
+
+    def _declines_topk(self, table, order, filters, docs) -> bool:
+        """`.Order().Limit()` pushdown (sql_to_datastore.go:107-119) under
+        the native planner's composition rule: when the query has an
+        inequality filter, the FIRST sort property must be that same
+        property (Datastore rejects the query otherwise) — violations
+        decline into Spark's polyfill. Equality-only filters compose with
+        any sort."""
+        ineq = [c for c, op, _ in filters if op not in ("=", "!=")]
+        if ineq and (not order or order[0][0] != ineq[0]):
+            return True
+        # a != is itself an inequality; keep the rule simple
+        return any(op == "!=" for _, op, _ in filters)
 
     # ------------------------------------------------------------- writes
 
@@ -168,70 +98,9 @@ class DatastoreStyleSource(Source):
         Put(key, entity) upserts the entity at its KEY — the UPDATE path is
         an explicit read-modify-write: fetch by key, apply SET, put back;
         deletes are by key after the same query). Entity Put is keyed
-        always, so INSERT of an existing key replaces the entity."""
-        url = self.endpoints.get(table)
+        always, by the DECLARED entity key, so INSERT of an existing key
+        replaces the entity."""
         key = self.entity_keys.get(table)
-        if url is None or key is None or not url.startswith("file://"):
+        if key is None:
             return None
-        from dataux_spark.sources.mongo_style import _DocMutator
-
-        class _EntityMutator(_DocMutator):
-            def put(self, batch, keys):
-                # entity Put is keyed by the DECLARED entity key, never the
-                # caller's (the engine's first-insert-column fallback would
-                # upsert on an arbitrary property and replace wrong rows)
-                return super().put(batch, [key])
-
-        return _EntityMutator(spark, url[len("file://"):])
-
-    @classmethod
-    def _ensure_format(cls, spark: SparkSession) -> None:
-        key = id(spark)
-        if key not in cls._registered_sessions:
-            spark.dataSource.register(DatastoreStyleDataSource)
-            cls._registered_sessions.add(key)
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-
-    def tables(self) -> list[str]:
-        return list(self.endpoints)
-
-    def load(self, spark: SparkSession, table: str) -> DataFrame:
-        if table not in self.endpoints:
-            raise KeyError(f"unknown table {table!r} in source {self.name!r}")
-        self._ensure_format(spark)
-        reader = (
-            spark.read.format("dataux_datastore")
-            .option("url", self.endpoints[table])
-            .option("qid", f"{self.name}.{table}")
-        )
-        if self.push_log_dir:
-            reader = reader.option("push_log_dir", self.push_log_dir)
-        return reader.load()
-
-    def execute_topk(self, spark, table, cols, order, limit, filters):
-        """`.Order().Limit()` pushdown (sql_to_datastore.go:107-119) under
-        the native planner's composition rule: when the query has an
-        inequality filter, the FIRST sort property must be that same
-        property (Datastore rejects the query otherwise) — violations
-        decline into Spark's polyfill. Equality-only filters compose with
-        any sort."""
-        if table not in self.endpoints:
-            return None
-        ineq = [c for c, op, _ in filters if op not in ("=", "!=")]
-        if ineq and (not order or order[0][0] != ineq[0]):
-            return None
-        if any(op == "!=" for _, op, _ in filters):
-            return None  # a != is itself an inequality; keep the rule simple
-        from dataux_spark.sources.base import topk_documents
-
-        docs = _fetch_json(self.endpoints[table])
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        if self.push_log_dir:
-            import os
-
-            with open(
-                os.path.join(self.push_log_dir, f"{self.name}.{table}.topk.json"), "w"
-            ) as fh:
-                json.dump({"sort": [[c, d] for c, d in order], "limit": limit,
-                           "filters": [[c, o, v] for c, o, v in filters]}, fh)
-        return topk_documents(spark, docs, cols, order, limit, filters)
+        return self._doc_mutator(spark, table, [key])

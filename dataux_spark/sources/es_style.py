@@ -5,37 +5,18 @@ subset it can express as a native `_search` body — term (=), range
 (<,<=,>,>=), terms (IN), exists/missing, prefix — flagging everything else
 `needsWherePolyFill`; the engine re-applies the flagged residue after the
 scan (/root/reference/backends/elasticsearch/sqltoes.go:403-586, residual
-polyfill contract per README.md:10-16).
-
-Spark-first: that accept-or-residual negotiation IS Catalyst's DataSource
-filter pushdown, so the backend is a Spark 4 Python DataSource whose
-reader's ``pushFilters()`` keeps the ES-expressible subset and returns the
-rest — Catalyst then plans the residual Filter node automatically (the
-polyfill). Nothing is hand-scheduled: the engine half of the reference's
-contract is Catalyst itself.
-
-Scale: filters accepted here execute "remotely" (inside the source read, the
-`_search` analog), so a 100 TB index transfers only matching documents. At
-cluster scale ``partitions()`` would slice the scroll/entity API by shard or
-key range into many InputPartitions — one task per shard, each shipping its
-own pushed-filter query; the single-partition shape below matches the
-control-plane-sized fixtures this offline environment exercises.
+polyfill contract per README.md:10-16). Whole aggregations and terms(k)
+translate into the `_search` aggs body (sqltoes.go:285-365,599-647). Schema
+discovery walks every document (the index mapping analog).
 """
 
 from __future__ import annotations
 
-import json
-import urllib.request
-
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
     In,
-    InputPartition,
     IsNotNull,
     IsNull,
     LessThan,
@@ -45,8 +26,9 @@ from pyspark.sql.datasource import (
 )
 
 from dataux_spark.infer import infer_from_documents
-from dataux_spark.sources.base import PushdownTier, Source
-from dataux_spark.sources.rest import _fetch_json, _flatten
+from dataux_spark.sources.base import PushdownTier, filter_documents
+from dataux_spark.sources.docstore import DocStoreSource, split_filters
+from dataux_spark.sources.rest import fetch_docs
 
 # What the ES walker can express natively (sqltoes.go:403-586): term, range,
 # terms-IN, exists/missing, prefix; NOT via bool must_not.  Everything else
@@ -64,18 +46,6 @@ _ACCEPTED = (
     StringStartsWith,
 )
 
-def read_push_log(log_dir: str, qid: str) -> dict[str, list[str]]:
-    """Read the pushdown-negotiation record a scan wrote for ``qid``.
-
-    pushFilters() runs inside a Spark Python planning worker (a separate
-    process), so the record travels through a file, not module state:
-    {"pushed": [filter reprs], "residual": [filter reprs]}.
-    """
-    import os
-
-    with open(os.path.join(log_dir, f"{qid}.json")) as fh:
-        return json.load(fh)
-
 
 def _acceptable(f) -> bool:
     if isinstance(f, Not):
@@ -85,157 +55,22 @@ def _acceptable(f) -> bool:
     return len(f.attribute) == 1  # flattened dotted columns are one segment
 
 
-def _eval(f, doc):
-    """Three-valued filter evaluation over a document (the remote `_search`
-    execution analog). Returns True/False/None; a row is kept iff True."""
-    if isinstance(f, Not):
-        inner = _eval(f.child, doc)
-        return None if inner is None else not inner
-    v = doc.get(f.attribute[0])
-    if isinstance(f, IsNull):
-        return v is None
-    if isinstance(f, IsNotNull):
-        return v is not None
-    if v is None:
-        return None
-    if isinstance(f, EqualTo):
-        return v == f.value
-    if isinstance(f, GreaterThan):
-        return v > f.value
-    if isinstance(f, GreaterThanOrEqual):
-        return v >= f.value
-    if isinstance(f, LessThan):
-        return v < f.value
-    if isinstance(f, LessThanOrEqual):
-        return v <= f.value
-    if isinstance(f, In):
-        return v in f.value
-    if isinstance(f, StringStartsWith):
-        return isinstance(v, str) and v.startswith(f.value)
-    return None
-
-
-class EsStyleReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self._schema = schema
-        self._url = options["url"]
-        self._qid = options.get("qid", self._url)
-        self._log_dir = options.get("push_log_dir")
-        self._pushed = []
-
-    def pushFilters(self, filters):
-        accepted, residual = [], []
-        for f in filters:
-            (accepted if _acceptable(f) else residual).append(f)
-        self._pushed = accepted
-        if self._log_dir:
-            import os
-
-            with open(os.path.join(self._log_dir, f"{self._qid}.json"), "w") as fh:
-                json.dump(
-                    {"pushed": [repr(f) for f in accepted],
-                     "residual": [repr(f) for f in residual]},
-                    fh,
-                )
-        return residual  # Catalyst re-applies these — the polyfill
-
-    def partitions(self):
-        # One task for a control-plane-sized listing; a sharded index would
-        # return one InputPartition per shard/scroll-slice here.
-        #
-        # CRITICAL lifecycle detail: the reader object LIVES ACROSS QUERIES
-        # (a registered view holds one relation), and Spark only calls
-        # pushFilters() when the query has candidate filters — so read()
-        # must never consult self._pushed (a filterless query after a
-        # filtered one would silently reuse the previous query's filters).
-        # partitions() runs during each query's planning, after any
-        # pushFilters(): consume the pushed set here, embed it in the
-        # InputPartition, and clear it.
-        pushed, self._pushed = self._pushed, []
-        return [InputPartition((0, pushed))]
-
-    def read(self, partition):
-        _, pushed = partition.value
-        docs = _fetch_json(self._url)
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        cols = [f.name for f in self._schema.fields]
-        for d in docs:
-            if all(_eval(f, d) is True for f in pushed):
-                yield tuple(d.get(c) for c in cols)
-
-
-class EsStyleDataSource(DataSource):
-    @classmethod
-    def name(cls):
-        return "dataux_es"
-
-    def schema(self):
-        docs = _fetch_json(self.options["url"])
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        return infer_from_documents(docs, sample_n=len(docs) or 1)
-
-    def reader(self, schema):
-        return EsStyleReader(schema, self.options)
-
-
-class EsStyleRestSource(Source):
+class EsStyleRestSource(DocStoreSource):
     """name → {table: url}; each table scans through the pushdown reader."""
 
+    format = "dataux_es"
     tier = PushdownTier.FILTERS_LIMIT_AGGS
     default_limit = 1000
-    fresh_scan_per_query = True
-    _registered_sessions: set[int] = set()
-
-    def __init__(self, name: str, endpoints: dict[str, str], push_log_dir: str | None = None):
-        self.name = name
-        self.endpoints = dict(endpoints)
-        self.push_log_dir = push_log_dir
+    schema_sample = None
 
     @classmethod
-    def _ensure_format(cls, spark: SparkSession) -> None:
-        key = id(spark)
-        if key not in cls._registered_sessions:
-            spark.dataSource.register(EsStyleDataSource)
-            cls._registered_sessions.add(key)
-        # runtime conf so a vanilla (driver-owned) session works too
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-
-    def tables(self) -> list[str]:
-        return list(self.endpoints)
-
-    def load(self, spark: SparkSession, table: str) -> DataFrame:
-        if table not in self.endpoints:
-            raise KeyError(f"unknown table {table!r} in source {self.name!r}")
-        self._ensure_format(spark)
-        reader = (
-            spark.read.format("dataux_es")
-            .option("url", self.endpoints[table])
-            .option("qid", f"{self.name}.{table}")
-        )
-        if self.push_log_dir:
-            reader = reader.option("push_log_dir", self.push_log_dir)
-        return reader.load()
+    def split_pushable(cls, filters, schema, options):
+        return split_filters(filters, _acceptable)
 
     # --------------------------------------------- aggregate pushdown (ES)
 
     def _docs(self, table: str) -> list[dict]:
-        docs = _fetch_json(self.endpoints[table])
-        return [_flatten(d) if isinstance(d, dict) else d for d in docs]
-
-    @staticmethod
-    def _filter_docs(docs: list[dict], filters) -> list[dict]:
-        from dataux_spark.sources.base import filter_documents
-
-        return filter_documents(docs, filters)
-
-    def _log_agg(self, table: str, payload: dict, kind: str = "agg") -> None:
-        if self.push_log_dir:
-            import os
-
-            with open(
-                os.path.join(self.push_log_dir, f"{self.name}.{table}.{kind}.json"), "w"
-            ) as fh:
-                json.dump(payload, fh)
+        return fetch_docs(self.endpoints[table])
 
     def execute_agg(self, spark, table, items, filters, group_by):
         """Whole-aggregation execution inside the source — the `_search`
@@ -255,7 +90,7 @@ class EsStyleRestSource(Source):
             return None
         from pyspark.sql import types as T
 
-        docs = self._filter_docs(self._docs(table), filters)
+        docs = filter_documents(self._docs(table), filters)
         schema = infer_from_documents(docs or self._docs(table))
         ftypes = {f.name: f.dataType for f in schema.fields}
 
@@ -318,26 +153,12 @@ class EsStyleRestSource(Source):
                 # the source accepted the pushdown or the polyfill ran
                 name = alias or (f"{fn}({arg})" if arg != "*" else f"{fn}(1)")
                 fields.append(T.StructField(name, agg_type(fn, arg), True))
-        self._log_agg(table, {
+        self._log(table, "agg", {
             "aggs": [[fn, arg] for fn, arg, _ in items],
             "filters": [[c, o, v] for c, o, v in filters],
             "group_by": group_by,
         })
         return spark.createDataFrame(rows, T.StructType(fields))
-
-    def execute_topk(self, spark, table, cols, order, limit, filters):
-        """Sort + size inside `_search` (sqltoes.go:170-186 sort array;
-        size at :22): the index returns the top n hits, not the index."""
-        if table not in self.endpoints:
-            return None
-        from dataux_spark.sources.base import topk_documents
-
-        # top-k logs to its own file (.topk.json, matching the other
-        # tiers) so it never clobbers the last agg log entry
-        self._log_agg(table, {"sort": [[c, d] for c, d in order], "limit": limit,
-                              "filters": [[c, o, v] for c, o, v in filters]},
-                      kind="topk")
-        return topk_documents(spark, self._docs(table), cols, order, limit, filters)
 
     def execute_terms(self, spark, table, field, size, filters):
         """terms(field, k) inside the source (sqltoes.go:612-634): per-key
@@ -347,7 +168,7 @@ class EsStyleRestSource(Source):
             return None
         from pyspark.sql import types as T
 
-        docs = self._filter_docs(self._docs(table), filters)
+        docs = filter_documents(self._docs(table), filters)
         counts: dict = {}
         for d in docs:
             k = d.get(field)
@@ -355,8 +176,8 @@ class EsStyleRestSource(Source):
         top = sorted(counts.items(), key=lambda kv: (-kv[1], str(kv[0])))[:size]
         ktype = infer_from_documents(self._docs(table)).fields
         ktype = next((f.dataType for f in ktype if f.name == field), T.StringType())
-        self._log_agg(table, {"terms": [field, size],
-                              "filters": [[c, o, v] for c, o, v in filters]})
+        self._log(table, "agg", {"terms": [field, size],
+                                 "filters": [[c, o, v] for c, o, v in filters]})
         return spark.createDataFrame(
             [(k, v) for k, v in top],
             T.StructType([T.StructField("key", ktype, True),

@@ -7,31 +7,22 @@ the entity-scan REST API; no WHERE → `FILTER *`
 (/root/reference/backends/lytics/generator.go:62-111, filterAll fallback
 :103-107; result paging resultreader.go:53-128).
 
-Spark-first: the Catalyst half stays the standard pushFilters negotiation,
-but the accepted subset is RENDERED AS SegmentQL text — the artifact the
-reference ships over the wire — and recorded in the push log, so tests can
-pin the generated statement exactly. Filters SegmentQL can't express from
-the V2 vocabulary (none today — the expression language covers the whole
-set) would decline into Catalyst residuals like every other tier.
-
-Scale: the SegmentQL text executes remotely (entity scan API); only
-matching entities transfer. partitions() would slice the scan API's
-paging segments at cluster scale.
+The accepted subset is RENDERED AS SegmentQL text — the artifact the
+reference ships over the wire — and recorded in the push log's
+`segmentql` field, so tests can pin the generated statement exactly.
+Filters SegmentQL can't express from the V2 vocabulary (none today — the
+expression language covers the whole set) would decline into Catalyst
+residuals like every other tier. SegmentQL has no sort, so top-k always
+declines into Spark.
 """
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
     In,
-    InputPartition,
     IsNotNull,
     IsNull,
     LessThan,
@@ -42,10 +33,8 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
-from dataux_spark.infer import infer_from_documents
-from dataux_spark.sources.base import PushdownTier, Source
-from dataux_spark.sources.mongo_style import _eval  # same doc-eval semantics
-from dataux_spark.sources.rest import _fetch_json, _flatten
+from dataux_spark.sources.base import PushdownTier
+from dataux_spark.sources.docstore import DocStoreSource, split_filters
 
 _ACCEPTED = (
     EqualTo,
@@ -118,95 +107,24 @@ def _acceptable(f) -> bool:
     return isinstance(f, _ACCEPTED) and len(f.attribute) == 1
 
 
-class LyticsStyleReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self._schema = schema
-        self._url = options["url"]
-        self._table = options.get("table", "entities")
-        self._qid = options.get("qid", self._url)
-        self._log_dir = options.get("push_log_dir")
-        self._pushed = []
-
-    def pushFilters(self, filters):
-        accepted, residual = [], []
-        for f in filters:
-            (accepted if _acceptable(f) else residual).append(f)
-        self._pushed = accepted
-        if self._log_dir:
-            import os
-
-            with open(os.path.join(self._log_dir, f"{self._qid}.json"), "w") as fh:
-                json.dump(
-                    {"pushed": [repr(f) for f in accepted],
-                     "residual": [repr(f) for f in residual],
-                     "segmentql": segmentql(self._table, accepted)},
-                    fh,
-                )
-        return residual
-
-    def partitions(self):
-        # consume-and-clear; see es_style.EsStyleReader.partitions
-        pushed, self._pushed = self._pushed, []
-        return [InputPartition((0, pushed))]
-
-    def read(self, partition):
-        _, pushed = partition.value
-        docs = _fetch_json(self._url)
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        cols = [f.name for f in self._schema.fields]
-        for d in docs:
-            if all(_eval(f, d) is True for f in pushed):
-                yield tuple(d.get(c) for c in cols)
-
-
-class LyticsStyleDataSource(DataSource):
-    @classmethod
-    def name(cls):
-        return "dataux_lytics"
-
-    def schema(self):
-        docs = _fetch_json(self.options["url"])
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        return infer_from_documents(docs)
-
-    def reader(self, schema):
-        return LyticsStyleReader(schema, self.options)
-
-
-class LyticsStyleSource(Source):
+class LyticsStyleSource(DocStoreSource):
     """name → {entity-table: url}; WHERE pushes as generated SegmentQL."""
 
+    format = "dataux_lytics"
     tier = PushdownTier.FILTERS_LIMIT
     default_limit = 1000
-    fresh_scan_per_query = True
-    _registered_sessions: set[int] = set()
-
-    def __init__(self, name: str, endpoints: dict[str, str], push_log_dir: str | None = None):
-        self.name = name
-        self.endpoints = dict(endpoints)
-        self.push_log_dir = push_log_dir
+    list_membership = True  # same document-model evaluation as mongo
 
     @classmethod
-    def _ensure_format(cls, spark: SparkSession) -> None:
-        key = id(spark)
-        if key not in cls._registered_sessions:
-            spark.dataSource.register(LyticsStyleDataSource)
-            cls._registered_sessions.add(key)
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    def split_pushable(cls, filters, schema, options):
+        return split_filters(filters, _acceptable)
 
-    def tables(self) -> list[str]:
-        return list(self.endpoints)
+    def _scan_options(self, table):
+        return {"table": table}
 
-    def load(self, spark: SparkSession, table: str) -> DataFrame:
-        if table not in self.endpoints:
-            raise KeyError(f"unknown table {table!r} in source {self.name!r}")
-        self._ensure_format(spark)
-        reader = (
-            spark.read.format("dataux_lytics")
-            .option("url", self.endpoints[table])
-            .option("table", table)
-            .option("qid", f"{self.name}.{table}")
-        )
-        if self.push_log_dir:
-            reader = reader.option("push_log_dir", self.push_log_dir)
-        return reader.load()
+    @classmethod
+    def push_log_fields(cls, accepted, options):
+        return {"segmentql": segmentql(options.get("table", "entities"), accepted)}
+
+    def _declines_topk(self, table, order, filters, docs) -> bool:
+        return True

@@ -17,37 +17,30 @@ Mongo's document model matches scalar predicates against array fields by
 MEMBERSHIP (`category IN ("news")` matches docs whose category array
 contains "news", mgo_test.go:654-670). Engine half: the dialect rewrites
 =/IN on array-typed columns to arrays_overlap (engine._rewrite_array_in);
-source half: the pushed-filter evaluator below applies membership when a
+source half: the pushed-filter evaluator applies membership when a
 document value turns out to be a list (schemaless drift: the sampled
 schema said scalar, a later document holds an array).
 
-Spark-first: a Spark 4 Python DataSource; pushFilters() keeps the
-Mongo-expressible subset, Catalyst plans the returned residue as a Filter
-node — the polyfill. BETWEEN arrives as a GreaterThanOrEqual +
-LessThanOrEqual pair, LIKE 'x%'/'%x'/'%x%' as
-StringStartsWith/EndsWith/Contains, so accepting those four classes IS
-accepting the reference's LIKE/BETWEEN surface.
+BETWEEN arrives as a GreaterThanOrEqual + LessThanOrEqual pair, LIKE
+'x%'/'%x'/'%x%' as StringStartsWith/EndsWith/Contains, so accepting those
+four classes IS accepting the reference's LIKE/BETWEEN surface.
 
-Scale: accepted filters execute inside the source read (the Find() analog)
-— a 100 TB collection ships only matching documents. ``partitions()``
-would slice by shard-key ranges at cluster scale (the reference's
-partitionct/key-range config, sql_to_mgo.go:189-209); the fixtures here
-are control-plane-sized, one partition.
+Partitioned parallel scan: config-declared key ranges, one worker per
+partition, the partition's range merged into each worker's native query
+(sql_to_mgo.go:189-209, partition config mgo_test.go:66-87).
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
     In,
-    InputPartition,
     IsNotNull,
     IsNull,
     LessThan,
@@ -58,14 +51,9 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
-from dataux_spark.infer import infer_from_documents
-from dataux_spark.sources.base import (
-    PushdownTier,
-    Source,
-    SourceMutator,
-    bounded_rows,
-)
-from dataux_spark.sources.rest import _fetch_json, _flatten
+from dataux_spark.sources.base import PushdownTier, filter_documents
+from dataux_spark.sources.docstore import DocStoreSource, split_filters
+from dataux_spark.sources.rest import fetch_docs
 
 # The Find()-expressible subset (sql_to_mgo.go:395-664). Note the contrast
 # with es_style._ACCEPTED: StringContains/StringEndsWith are IN (Mongo
@@ -99,139 +87,14 @@ def _acceptable(f) -> bool:
     return len(f.attribute) == 1
 
 
-def _eval(f, doc):
-    """Three-valued evaluation of a pushed filter against a document — the
-    remote Find() execution analog. Scalar predicates on list values use
-    Mongo membership semantics."""
-    if isinstance(f, Not):
-        # SQL three-valued negation: NULL stays NULL (no match), so a
-        # pushed $ne never resurrects NULL rows the residual would drop
-        inner = _eval(f.child, doc)
-        return None if inner is None else not inner
-    v = doc.get(f.attribute[0])
-    if isinstance(f, IsNull):
-        return v is None
-    if isinstance(f, IsNotNull):
-        return v is not None
-    if v is None:
-        return None
-    if isinstance(v, list):  # document-model membership (mgo_test.go:654-670)
-        if isinstance(f, EqualTo):
-            return f.value in v
-        if isinstance(f, In):
-            return any(x in f.value for x in v)
-        return None  # other ops on arrays: undefined here → treat as no-match
-    if isinstance(f, EqualTo):
-        return v == f.value
-    if isinstance(f, GreaterThan):
-        return v > f.value
-    if isinstance(f, GreaterThanOrEqual):
-        return v >= f.value
-    if isinstance(f, LessThan):
-        return v < f.value
-    if isinstance(f, LessThanOrEqual):
-        return v <= f.value
-    if isinstance(f, In):
-        return v in f.value
-    if isinstance(f, StringStartsWith):
-        return isinstance(v, str) and v.startswith(f.value)
-    if isinstance(f, StringEndsWith):
-        return isinstance(v, str) and v.endswith(f.value)
-    if isinstance(f, StringContains):
-        return isinstance(v, str) and f.value in v
-    return None
-
-
-class MongoStyleReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self._schema = schema
-        self._url = options["url"]
-        self._qid = options.get("qid", self._url)
-        self._log_dir = options.get("push_log_dir")
-        self._part_col = options.get("partition_col")
-        self._part_bounds = json.loads(options.get("partition_bounds", "[]"))
-        self._pushed = []
-
-    def pushFilters(self, filters):
-        accepted, residual = [], []
-        for f in filters:
-            (accepted if _acceptable(f) else residual).append(f)
-        self._pushed = accepted
-        if self._log_dir:
-            import os
-
-            with open(os.path.join(self._log_dir, f"{self._qid}.json"), "w") as fh:
-                json.dump(
-                    {"pushed": [repr(f) for f in accepted],
-                     "residual": [repr(f) for f in residual]},
-                    fh,
-                )
-        return residual
-
-    def partitions(self):
-        # Consume-and-clear the pushed set and ship it inside each
-        # partition (see es_style.EsStyleReader.partitions for why).
-        #
-        # Partitioned parallel scan (reference: config-declared key ranges,
-        # one worker per partition, the partition id injected into each
-        # worker's native query as a range filter merged into the WHERE —
-        # sql_to_mgo.go:189-209, partition config mgo_test.go:66-87): with
-        # partition_col + bounds [b0..bn], emit n+1 InputPartitions, each
-        # read applying its own half-open key range alongside the pushed
-        # filters. Spark schedules one task per partition — the §2.12
-        # "partitioned parallel scan" semantics with zero engine code.
-        pushed, self._pushed = self._pushed, []
-        if not self._part_col or not self._part_bounds:
-            return [InputPartition((None, pushed))]
-        bounds = [None, *self._part_bounds, None]
-        return [
-            InputPartition(((self._part_col, bounds[i], bounds[i + 1]), pushed))
-            for i in range(len(bounds) - 1)
-        ]
-
-    @staticmethod
-    def _in_range(doc, rng) -> bool:
-        if rng is None:
-            return True
-        col, lo, hi = rng
-        v = doc.get(col)
-        if v is None:
-            return lo is None  # NULL keys land in the first (open) range
-        return (lo is None or v >= lo) and (hi is None or v < hi)
-
-    def read(self, partition):
-        rng, pushed = partition.value
-        docs = _fetch_json(self._url)
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        cols = [f.name for f in self._schema.fields]
-        for d in docs:
-            if self._in_range(d, rng) and all(_eval(f, d) is True for f in pushed):
-                yield tuple(d.get(c) for c in cols)
-
-
-class MongoStyleDataSource(DataSource):
-    @classmethod
-    def name(cls):
-        return "dataux_mongo"
-
-    def schema(self):
-        # sample-30 discovery (mgo_source.go:241): constant cost at any size
-        docs = _fetch_json(self.options["url"])
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        return infer_from_documents(docs, sample_n=30)
-
-    def reader(self, schema):
-        return MongoStyleReader(schema, self.options)
-
-
-class MongoStyleSource(Source):
+class MongoStyleSource(DocStoreSource):
     """name → {collection: url}; each collection scans through the
     FILTERS_LIMIT pushdown reader."""
 
+    format = "dataux_mongo"
     tier = PushdownTier.FILTERS_LIMIT
     default_limit = 20  # sql_to_mgo.go:25
-    fresh_scan_per_query = True
-    _registered_sessions: set[int] = set()
+    list_membership = True
 
     def __init__(
         self,
@@ -243,59 +106,39 @@ class MongoStyleSource(Source):
         """`partitions`: {table: (key_col, [boundary, ...])} — declares the
         reference's config-level key-range partitioning (mgo_test.go:66-87);
         n boundaries → n+1 parallel scan tasks, each range-filtered."""
-        self.name = name
-        self.endpoints = dict(endpoints)
-        self.push_log_dir = push_log_dir
+        super().__init__(name, endpoints, push_log_dir)
         self.partitions = dict(partitions or {})
 
     @classmethod
-    def _ensure_format(cls, spark: SparkSession) -> None:
-        key = id(spark)
-        if key not in cls._registered_sessions:
-            spark.dataSource.register(MongoStyleDataSource)
-            cls._registered_sessions.add(key)
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    def split_pushable(cls, filters, schema, options):
+        return split_filters(filters, _acceptable)
 
-    def tables(self) -> list[str]:
-        return list(self.endpoints)
+    def _scan_options(self, table):
+        if table not in self.partitions:
+            return {}
+        col, bounds = self.partitions[table]
+        return {"partition_col": col, "partition_bounds": json.dumps(bounds)}
 
-    def load(self, spark: SparkSession, table: str) -> DataFrame:
-        if table not in self.endpoints:
-            raise KeyError(f"unknown table {table!r} in source {self.name!r}")
-        self._ensure_format(spark)
-        reader = (
-            spark.read.format("dataux_mongo")
-            .option("url", self.endpoints[table])
-            .option("qid", f"{self.name}.{table}")
-        )
-        if self.push_log_dir:
-            reader = reader.option("push_log_dir", self.push_log_dir)
-        if table in self.partitions:
-            col, bounds = self.partitions[table]
-            reader = reader.option("partition_col", col).option(
-                "partition_bounds", json.dumps(bounds)
-            )
-        return reader.load()
+    @classmethod
+    def scan_ranges(cls, options):
+        # partition_col + bounds [b0..bn] → n+1 half-open key ranges; Spark
+        # schedules one task per range
+        col = options.get("partition_col")
+        bounds = json.loads(options.get("partition_bounds", "[]"))
+        if not col or not bounds:
+            return [None]
+        edges = [None, *bounds, None]
+        return [(col, edges[i], edges[i + 1]) for i in range(len(edges) - 1)]
 
-    def execute_topk(self, spark, table, cols, order, limit, filters):
-        """Find(filter).Sort(keys).Limit(n) — the reference's native sort
-        path (sql_to_mgo.go:226-241): the backend returns n ordered rows,
-        never the collection."""
-        if table not in self.endpoints:
-            return None
-        from dataux_spark.sources.base import topk_documents
-
-        docs = _fetch_json(self.endpoints[table])
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        if self.push_log_dir:
-            import os
-
-            with open(
-                os.path.join(self.push_log_dir, f"{self.name}.{table}.topk.json"), "w"
-            ) as fh:
-                json.dump({"sort": [[c, d] for c, d in order], "limit": limit,
-                           "filters": [[c, o, v] for c, o, v in filters]}, fh)
-        return topk_documents(spark, docs, cols, order, limit, filters)
+    @staticmethod
+    def in_range(doc, rng) -> bool:
+        if rng is None:
+            return True
+        col, lo, hi = rng
+        v = doc.get(col)
+        if v is None:
+            return lo is None  # NULL keys land in the first (open) range
+        return (lo is None or v >= lo) and (hi is None or v < hi)
 
     def execute_agg(self, spark, table, items, filters, group_by):
         """The ONE aggregate Mongo pushes natively: count(*) as
@@ -307,22 +150,10 @@ class MongoStyleSource(Source):
             return None
         if len(items) != 1 or items[0][0] != "count" or items[0][1] != "*":
             return None
-        from pyspark.sql import types as T
-
-        from dataux_spark.sources.base import filter_documents
-
-        docs = _fetch_json(self.endpoints[table])
-        docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-        n = len(filter_documents(docs, filters))
+        n = len(filter_documents(fetch_docs(self.endpoints[table]), filters))
         alias = items[0][2] or "count(1)"  # Catalyst's default output name
-        if self.push_log_dir:
-            import os
-
-            with open(
-                os.path.join(self.push_log_dir, f"{self.name}.{table}.agg.json"), "w"
-            ) as fh:
-                json.dump({"count": True,
-                           "filters": [[c, o, v] for c, o, v in filters]}, fh)
+        self._log(table, "agg", {"count": True,
+                                 "filters": [[c, o, v] for c, o, v in filters]})
         return spark.createDataFrame(
             [(n,)], T.StructType([T.StructField(alias, T.LongType(), False)])
         )
@@ -333,70 +164,4 @@ class MongoStyleSource(Source):
         return all(u.startswith("file://") for u in self.endpoints.values())
 
     def mutator(self, spark: SparkSession, table: str):
-        url = self.endpoints.get(table)
-        if url is None or not url.startswith("file://"):
-            return None
-        return _DocMutator(spark, url[len("file://"):])
-
-
-class _DocMutator(SourceMutator):
-    """Doc-store mutator over the collection's backing JSON — the analog
-    of the reference Mongo mutator's per-document Put/Delete through the
-    driver session (schema.ConnMutation contract; upsert-by-id is how
-    every doc backend's Put behaves). Mutations are request-scale (a DML
-    statement's batch), not corpus-scale, so driver-side document
-    manipulation here matches the reference's own execution model."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark, self.path = spark, path
-
-    def _docs(self) -> list[dict]:
-        docs = _fetch_json(f"file://{self.path}")
-        return [_flatten(d) if isinstance(d, dict) else d for d in docs]
-
-    def _write(self, docs: list[dict]) -> None:
-        with open(self.path, "w") as fh:
-            json.dump(docs, fh, default=str)
-
-    @staticmethod
-    def _row_doc(row) -> dict:
-        # sparse documents: omit NULL columns, like a doc store would
-        return {k: v for k, v in row.asDict().items() if v is not None}
-
-    def put(self, batch: DataFrame, keys: list[str] | None) -> int:
-        new = [self._row_doc(r) for r in bounded_rows(batch)]
-        docs = self._docs()
-        if keys:
-            # last-write-wins WITHIN the batch too (CQL/doc-store upsert
-            # semantics): an INSERT..SELECT whose result repeats a key
-            # must leave one row per key, not append both
-            by_key = {tuple(d.get(k) for k in keys): d for d in new}
-            new = list(by_key.values())
-            docs = [d for d in docs if tuple(d.get(k) for k in keys) not in by_key]
-        self._write(docs + new)
-        return len(new)
-
-    def delete_where(self, cond) -> int:
-        # evaluate the SQL predicate with Spark over the loaded docs so
-        # DELETE semantics (three-valued, type coercions) match the
-        # engine's exactly, then persist the survivors
-        docs = self._docs()
-        if cond is None:
-            self._write([])
-            return len(docs)
-        if not docs:  # emptied collection: the predicate matches nothing
-            return 0
-        from dataux_spark.infer import infer_from_documents
-
-        schema = infer_from_documents(docs)
-        cols = [f.name for f in schema.fields]
-        df = self.spark.createDataFrame(
-            [tuple(d.get(c) for c in cols) for d in docs], schema
-        )
-        n = df.filter(cond).count()
-        keep = df.filter(~cond | cond.isNull())
-        self._write([self._row_doc(r) for r in keep.collect()])
-        return n
-
-    def overwrite(self, df: DataFrame) -> None:
-        self._write([self._row_doc(r) for r in bounded_rows(df)])
+        return self._doc_mutator(spark, table)

@@ -50,6 +50,11 @@ def _flatten(doc: dict, prefix: str = "") -> dict:
     return out
 
 
+def fetch_docs(url: str) -> list:
+    """Fetch a collection with every document's nested objects flattened."""
+    return [_flatten(d) if isinstance(d, dict) else d for d in _fetch_json(url)]
+
+
 class RestJsonSource(Source):
     """name → {table: url} endpoints, each a JSON list (or {items: [...]})."""
 
@@ -67,10 +72,8 @@ class RestJsonSource(Source):
 
     def _docs(self, table: str) -> list[dict]:
         if table not in self._cache:
-            docs = _fetch_json(self.endpoints[table])
-            if self.flatten:
-                docs = [_flatten(d) if isinstance(d, dict) else d for d in docs]
-            self._cache[table] = docs
+            url = self.endpoints[table]
+            self._cache[table] = fetch_docs(url) if self.flatten else _fetch_json(url)
         return self._cache[table]
 
     def load(self, spark: SparkSession, table: str) -> DataFrame:

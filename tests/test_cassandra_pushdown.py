@@ -11,7 +11,7 @@ import pytest
 from dataux_spark import Engine
 from dataux_spark.infer import TableMeta
 from dataux_spark.sources.cassandra_style import CassandraStyleSource
-from dataux_spark.sources.es_style import read_push_log
+from dataux_spark.sources.docstore import read_push_log
 from dataux_spark.sources.rest import RestJsonSource
 
 # event-log style table: PRIMARY KEY ((device), day, seq)

@@ -13,7 +13,8 @@ import json
 import pytest
 
 from dataux_spark import Engine
-from dataux_spark.sources.es_style import EsStyleRestSource, read_push_log
+from dataux_spark.sources.docstore import read_push_log
+from dataux_spark.sources.es_style import EsStyleRestSource
 from dataux_spark.sources.rest import RestJsonSource
 
 PODS = [

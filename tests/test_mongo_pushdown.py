@@ -14,7 +14,7 @@ import json
 import pytest
 
 from dataux_spark import Engine
-from dataux_spark.sources.es_style import read_push_log
+from dataux_spark.sources.docstore import read_push_log
 from dataux_spark.sources.mongo_style import MongoStyleSource
 from dataux_spark.sources.rest import RestJsonSource
 

@@ -219,7 +219,13 @@ def test_config_dump_load_roundtrip(spark, tmp_path):
 
     (tmp_path / "a.json").write_text(_json.dumps([{"k": 1, "v": "x"}]))
     e = Engine(spark)
-    e.register_source(MongoStyleSource("cfmgo", {"cfdocs": f"file://{tmp_path}/a.json"}))
+    e.register_source(
+        MongoStyleSource(
+            "cfmgo",
+            {"cfdocs": f"file://{tmp_path}/a.json", "cfparts": f"file://{tmp_path}/a.json"},
+            partitions={"cfparts": ("k", [1, 2, 3])},
+        )
+    )
     e.register_source(
         DatastoreStyleSource(
             "cfds", {"cfents": f"file://{tmp_path}/a.json"}, entity_keys={"cfents": "k"}
@@ -243,6 +249,8 @@ def test_config_dump_load_roundtrip(spark, tmp_path):
     assert e2.sources["cfcass"].meta("cfcass").clustering_keys == ["v"]
     assert e2.sources["cfds"].entity_keys == {"cfents": "k"}
     assert [tuple(r) for r in e2.sql("SELECT k, v FROM cfdocs").collect()] == [(1, "x")]
+    # key-range partitions survive the round trip: 3 bounds -> 4 scan tasks
+    assert e2.sources["cfmgo"].load(spark, "cfparts").rdd.getNumPartitions() == 4
     # SHOW CREATE SOURCE round-trips through the DDL path
     row = e.sql("SHOW CREATE SOURCE cfmgo").collect()[0]
     assert row[0] == "cfmgo" and row[1].startswith("CREATE source cfmgo WITH ")
