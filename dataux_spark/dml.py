@@ -29,6 +29,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataux_spark.sqlutil import local_frame
+
 _INSERT_RE = re.compile(
     r"^\s*(INSERT|UPSERT)\s+INTO\s+`?(\w+)`?\s*\(([^)]*)\)\s*VALUES\s*(.+)$",
     re.IGNORECASE | re.DOTALL,
@@ -653,10 +655,7 @@ class TableStore:
             return
         # in-memory: materialize before re-registering (the new plan reads
         # the old view — re-registering without a barrier would self-refer)
-        rows = df.collect()
-        out = self.spark.createDataFrame(rows, df.schema) if rows else \
-            self.spark.createDataFrame([], df.schema)
-        out.createOrReplaceTempView(table)
+        local_frame(self.spark, df.collect(), df.schema).createOrReplaceTempView(table)
 
 
 def target_table(sql: str) -> str | None:

@@ -46,6 +46,7 @@ from dataux_spark.sources import (
     Source,
 )
 from dataux_spark.sources.passthrough import DuckDBPassthroughSource
+from dataux_spark.sqlutil import local_frame
 
 
 class QueryError(Exception):
@@ -113,6 +114,13 @@ _UNRESOLVED_COL_RE = re.compile(
     r"|Column '`?([\w.]+)`?' does not exist",
     re.DOTALL,
 )
+
+
+def _literal_dotted(fields: list[T.StructField]) -> set[str]:
+    """Columns whose names literally contain dots (flattened sources —
+    e.g. an ES-style mapping walk); their backtick tokens must not be
+    split into struct access."""
+    return {f.name for f in fields if "." in f.name}
 
 
 class Engine:
@@ -397,15 +405,35 @@ class Engine:
             out.extend(s.tables())
         return out
 
+    def _fields(self, tables: list[str]) -> list[T.StructField]:
+        """Schema fields of `tables`, one lookup per table; a table that
+        does not resolve contributes none."""
+        fields: list[T.StructField] = []
+        for t in tables:
+            try:
+                fields.extend(self.spark.table(t).schema.fields)
+            except Exception:
+                pass
+        return fields
+
     def _all_columns(self) -> set[str]:
-        cols: set[str] = set()
-        for s in self.sources.values():
-            for t in s.tables():
-                try:
-                    cols.update(self.spark.table(t).columns)
-                except Exception:
-                    pass
-        return cols
+        return {f.name for f in self._fields(self._all_tables())}
+
+    def _statement_fields(self, stmt: str) -> list[T.StructField]:
+        """Schema fields of the registered source tables `stmt` names: each
+        one whose name appears as a word outside string literals, so comma
+        joins, subqueries and CTE bodies count. A statement that names
+        none of them (a read through a user view) gets every source
+        table's fields."""
+        words = {
+            w.lower()
+            for kind, text in dialect._segments(stmt)
+            if kind in ("code", "btick")
+            for w in re.findall(r"\w+", text)
+        }
+        tables = self._all_tables()
+        named = [t for t in tables if t.lower() in words]
+        return self._fields(named or tables)
 
     # ------------------------------------------------------------ sql entry
 
@@ -615,8 +643,8 @@ class Engine:
                     "(memory sources have no durable config)"
                 )
             stmt_txt = f"CREATE source {name} WITH {json.dumps(conf)}"
-            return self.spark.createDataFrame(
-                [(name, stmt_txt)], "Source STRING, `Create Source` STRING"
+            return local_frame(
+                self.spark, [(name, stmt_txt)], "Source STRING, `Create Source` STRING"
             )
         m = self._SHOW_CREATE_RE.match(s)
         if m:
@@ -632,7 +660,7 @@ class Engine:
             r"\s+`?(\w+)`?\s*$", s, re.I)
         if m:
             hist = self.store.history(m.group(1))
-            return self.spark.createDataFrame(hist, "version INT, path STRING")
+            return local_frame(self.spark, hist, "version INT, path STRING")
         if re.match(r"^\s*SHOW\s+SOURCES\s*$", s, re.I):
             # federation registry introspection (extension): one row per
             # registered backend with its pushdown tier — the engine-level
@@ -647,7 +675,8 @@ class Engine:
                 )
                 for src in self.sources.values()
             ]
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 rows,
                 "source STRING, tier STRING, n_tables INT, writable BOOLEAN, default_limit INT",
             )
@@ -657,29 +686,18 @@ class Engine:
         # anything else (SHOW FUNCTIONS, DESCRIBE QUERY ...): Spark-native
         return self.spark.sql(s)
 
-    def _array_columns(self) -> set[str]:
-        cols: set[str] = set()
-        for s in self.sources.values():
-            for t in s.tables():
-                try:
-                    for f in self.spark.table(t).schema.fields:
-                        if f.dataType.typeName() == "array":
-                            cols.add(f.name)
-                except Exception:
-                    pass
-        return cols
-
     _IN_RE = re.compile(
         r"\b([A-Za-z_]\w*)\s+IN\s*\(((?:[^()'\"]|'[^']*'|\"[^\"]*\")*)\)", re.IGNORECASE
     )
 
-    def _rewrite_array_in(self, sql: str) -> str:
+    def _rewrite_array_in(self, sql: str, fields: list[T.StructField]) -> str:
         """`arraycol IN ("x")` means membership when the column is an array
         (schemaless-document semantics: reference mgo_test.go:654-670 —
         Mongo matches scalar queries against array fields). Spark needs
         arrays_overlap. The regex is quote-aware so IN-lists with string
-        literals match as one unit."""
-        arr_cols = self._array_columns()
+        literals match as one unit. `fields` are the schema fields of the
+        statement's tables (_statement_fields)."""
+        arr_cols = {f.name for f in fields if isinstance(f.dataType, T.ArrayType)}
         if not arr_cols:
             return sql
 
@@ -720,7 +738,8 @@ class Engine:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain(mode)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(line,) for line in buf.getvalue().rstrip("\n").split("\n")],
             "plan: string",
         )
@@ -813,8 +832,9 @@ class Engine:
             return self._grouped_terms(m)
         stmt = self._resolve_time_travel(stmt)
         stmt = self._resolve_table_changes(stmt)
-        sql = dialect.rewrite(stmt, self.ctx, literal_dotted=self._literal_dotted_columns())
-        sql = self._rewrite_array_in(sql)
+        fields = self._statement_fields(stmt)
+        sql = dialect.rewrite(stmt, self.ctx, literal_dotted=_literal_dotted(fields))
+        sql = self._rewrite_array_in(sql, fields)
         df = self._try_full_pushdown(sql)
         if df is None:
             df = self._try_topk_pushdown(sql)
@@ -1066,16 +1086,6 @@ class Engine:
             filters.append((cm.group(1), op, val))
         return filters
 
-    def _literal_dotted_columns(self) -> set[str]:
-        """Columns whose names literally contain dots (flattened sources —
-        e.g. an ES-style mapping walk); their backtick tokens must not be
-        split into struct access."""
-        out: set[str] = set()
-        for c in self._all_columns():
-            if "." in c:
-                out.add(c)
-        return out
-
     def _select_session_vars(self, select_list: str) -> DataFrame:
         """SELECT @@max_allowed_packet / SELECT @my_var
         (reference mgo_test.go:123-173)."""
@@ -1115,7 +1125,7 @@ class Engine:
         if m.group("where"):
             base = base.filter(
                 dialect.rewrite(m.group("where"), self.ctx,
-                                literal_dotted=self._literal_dotted_columns())
+                                literal_dotted=_literal_dotted(self._statement_fields(m.string)))
             )
         out = None
         plain: list[str] = []
@@ -1197,7 +1207,10 @@ class Engine:
         df = self.spark.table(table)
         if where:
             df = df.filter(
-                dialect.rewrite(where, self.ctx, literal_dotted=self._literal_dotted_columns())
+                dialect.rewrite(
+                    where, self.ctx,
+                    literal_dotted=_literal_dotted(self._statement_fields(m.string)),
+                )
             )
         return (
             df.groupBy(F.col(field).alias("key"))

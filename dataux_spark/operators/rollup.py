@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataux_spark.sqlutil import values_frame
+from dataux_spark.sqlutil import local_frame
 
 #: algebraic partials kept per (bucket, key) — everything needed to answer
 #: count/sum/min/max/avg at query time by merging.
@@ -392,13 +392,9 @@ def build_quantile_rollup(
             .partitionBy("bucket_date")
             .parquet(f"{out_path}/hist")
         )
-    # VALUES literal, not createDataFrame (r14): the one-row RDD-backed
-    # meta frame cost ~4 s PER BUILD to write — its coalesce(1) write
-    # task pays a Python-worker round-trip per parent partition (see
-    # sqlutil.values_frame). Same row, same schema, ~0.15 s.
-    values_frame(
-        spark, [(vmin, vmax, bins)],
-        [("vmin", "double"), ("vmax", "double"), ("bins", "int")],
+    # a LocalRelation meta frame: its write runs no Python worker (sqlutil)
+    local_frame(
+        spark, [(float(vmin), float(vmax), int(bins))], "vmin double, vmax double, bins int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{out_path}/meta")
 
 

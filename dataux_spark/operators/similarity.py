@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from dataux_spark.sqlutil import values_frame
+from dataux_spark.sqlutil import local_frame
 
 
 def _as_double(vec_col: str):
@@ -461,13 +461,11 @@ def build_ivf_index(
         .parquet(f"{index_path}/cells")
     )
     spark = corpus.sparkSession
-    # VALUES literal, not createDataFrame (r14): the RDD-backed centroid
-    # frame's coalesce(1) write pays a Python-worker round-trip per parent
-    # partition (~4 s flat — sqlutil.values_frame). Same rows, same types.
-    values_frame(
+    # a LocalRelation centroid frame: its write runs no Python worker (sqlutil)
+    local_frame(
         spark,
         [(int(i), [float(x) for x in cents[i]]) for i in range(len(cents))],
-        [("cell", "int"), ("centroid", "array<double>")],
+        "cell int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
 
 
@@ -545,11 +543,10 @@ def build_ivf_index_fixed(
     c.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
         f"{index_path}/cells"
     )
-    # VALUES literal, not createDataFrame — see build_ivf_index's note.
-    values_frame(
+    local_frame(
         corpus.sparkSession,
         [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
-        [("cell", "bigint"), ("centroid", "array<double>")],
+        "cell bigint, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
 
 

@@ -12,8 +12,10 @@ backends/mongo/mgo_test.go:175-301):
   SHOW DATABASES        → 1 col  (Database)
   SHOW VARIABLES        → 2 cols (Variable_name, Value)
 
-Spark-first: these are driver-side metadata — tiny literal DataFrames built
-from the catalog; never an executor job.
+Spark-first: these are driver-side metadata — tiny literal frames built
+from the catalog with `sqlutil.local_frame`. They plan as a JVM
+LocalRelation, so answering one runs no Python worker; reading one back is
+a LocalTableScan, never a job over a Python RDD.
 """
 
 from __future__ import annotations
@@ -22,6 +24,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from dataux_spark.sqlutil import local_frame
 
 # Spark type → mysql display type (reference sql_writer.go:28-120 mapping:
 # bool→tinyint(1), int→int, long→bigint, double→float, string→varchar(255),
@@ -66,7 +70,7 @@ def describe(spark: SparkSession, table: str, full: bool = False) -> DataFrame:
             rows.append((f.name, ty, coll, null, "", None, "", "select", ""))
         else:
             rows.append((f.name, ty, null, "", None, ""))
-    return spark.createDataFrame(rows, _FULL_SCHEMA if full else _DESC_SCHEMA)
+    return local_frame(spark, rows, _FULL_SCHEMA if full else _DESC_SCHEMA)
 
 
 def show_create_table(
@@ -82,16 +86,16 @@ def show_create_table(
     ]
     cols = ",\n".join(parts)
     ddl = f"CREATE TABLE `{table}` (\n{cols}\n) ENGINE=InnoDB DEFAULT CHARSET=utf8;"
-    return spark.createDataFrame([(table, ddl)], "Table string, `Create Table` string")
+    return local_frame(spark, [(table, ddl)], "Table string, `Create Table` string")
 
 
 def show_tables(spark: SparkSession, schema_name: str, tables: list[str]) -> DataFrame:
     col = f"Tables_in_{schema_name}"
-    return spark.createDataFrame([(t,) for t in sorted(tables)], f"`{col}` string")
+    return local_frame(spark, [(t,) for t in sorted(tables)], f"`{col}` string")
 
 
 def show_databases(spark: SparkSession, names: list[str]) -> DataFrame:
-    return spark.createDataFrame([(n,) for n in sorted(names)], "Database string")
+    return local_frame(spark, [(n,) for n in sorted(names)], "Database string")
 
 
 def show_variables(spark: SparkSession, ctx, like: str | None = None) -> DataFrame:
@@ -101,6 +105,4 @@ def show_variables(spark: SparkSession, ctx, like: str | None = None) -> DataFra
     if like:
         pat = re.compile("^" + re.escape(like).replace("%", ".*").replace("_", ".") + "$", re.I)
         items = [kv for kv in items if pat.match(kv[0])]
-    return spark.createDataFrame(items or [("", "")], "Variable_name string, Value string").filter(
-        "Variable_name != '' OR Value != ''"
-    )
+    return local_frame(spark, items, "Variable_name string, Value string")

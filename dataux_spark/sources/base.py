@@ -28,6 +28,8 @@ from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dataux_spark.sqlutil import local_frame
+
 
 def filter_documents(docs: list[dict], filters) -> list[dict]:
     """Apply the engine's fully-conjunctive (col, op, literal) filters to a
@@ -77,8 +79,8 @@ def topk_documents(spark, all_docs: list[dict], cols, order, limit, filters):
         )
     docs = docs[:limit]
     fields = [T.StructField(c, ftypes.get(c, T.StringType()), True) for c in cols]
-    return spark.createDataFrame(
-        [tuple(d.get(c) for c in cols) for d in docs], T.StructType(fields)
+    return local_frame(
+        spark, [tuple(d.get(c) for c in cols) for d in docs], T.StructType(fields)
     )
 
 

@@ -30,6 +30,7 @@ from dataux_spark.sources.base import (
     bounded_rows,
 )
 from dataux_spark.sources.rest import _fetch_json
+from dataux_spark.sqlutil import local_frame
 
 
 class FamilyTableSource(Source):
@@ -42,7 +43,7 @@ class FamilyTableSource(Source):
 
     tier = PushdownTier.SCAN_ONLY
     default_limit = 5000
-    # family views are createDataFrame snapshots of the in-memory row
+    # family views are local_frame snapshots of the in-memory row
     # store; re-register per query so DML through the mutator is
     # read-your-writes (the same refresh hook the pushdown tiers use
     # for scan-cache correctness — load() here is a cheap local build)
@@ -95,7 +96,7 @@ class FamilyTableSource(Source):
             # FamilyFilter: only rows with ≥1 cell in this family appear
             if any(k.startswith(prefix) for k in d)
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     # ------------------------------------------------------------- writes
 

@@ -64,6 +64,7 @@ from dataux_spark.sources.base import (
     topk_documents,
 )
 from dataux_spark.sources.rest import fetch_docs
+from dataux_spark.sqlutil import local_frame
 
 
 def write_push_log(log_dir: str, name: str, record: dict) -> None:
@@ -356,9 +357,7 @@ class _DocMutator(SourceMutator):
             return 0
         schema = infer_from_documents(docs)
         cols = [f.name for f in schema.fields]
-        df = self.spark.createDataFrame(
-            [tuple(d.get(c) for c in cols) for d in docs], schema
-        )
+        df = local_frame(self.spark, [tuple(d.get(c) for c in cols) for d in docs], schema)
         n = df.filter(cond).count()
         keep = df.filter(~cond | cond.isNull())
         self._write([self._row_doc(r) for r in keep.collect()])

@@ -29,6 +29,7 @@ from dataux_spark.infer import infer_from_documents
 from dataux_spark.sources.base import PushdownTier, filter_documents
 from dataux_spark.sources.docstore import DocStoreSource, split_filters
 from dataux_spark.sources.rest import fetch_docs
+from dataux_spark.sqlutil import local_frame
 
 # What the ES walker can express natively (sqltoes.go:403-586): term, range,
 # terms-IN, exists/missing, prefix; NOT via bool must_not.  Everything else
@@ -158,7 +159,7 @@ class EsStyleRestSource(DocStoreSource):
             "filters": [[c, o, v] for c, o, v in filters],
             "group_by": group_by,
         })
-        return spark.createDataFrame(rows, T.StructType(fields))
+        return local_frame(spark, rows, T.StructType(fields))
 
     def execute_terms(self, spark, table, field, size, filters):
         """terms(field, k) inside the source (sqltoes.go:612-634): per-key
@@ -178,8 +179,9 @@ class EsStyleRestSource(DocStoreSource):
         ktype = next((f.dataType for f in ktype if f.name == field), T.StringType())
         self._log(table, "agg", {"terms": [field, size],
                                  "filters": [[c, o, v] for c, o, v in filters]})
-        return spark.createDataFrame(
-            [(k, v) for k, v in top],
+        return local_frame(
+            spark,
+            top,
             T.StructType([T.StructField("key", ktype, True),
                           T.StructField("count", T.LongType(), False)]),
         )

@@ -20,10 +20,11 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataux_spark.sources.base import PushdownTier, Source
+from dataux_spark.sqlutil import local_frame
 
 
 class _DirSource(Source):
@@ -64,18 +65,22 @@ class _DirSource(Source):
 
     def files_table(self, spark: SparkSession) -> DataFrame | None:
         rows = [
-            Row(
-                file=os.path.basename(path),
-                table=t,
-                path=path,
-                size=os.path.getsize(path) if os.path.isfile(path) else 0,
-                partition=0,
+            (
+                os.path.basename(path),
+                t,
+                path,
+                os.path.getsize(path) if os.path.isfile(path) else 0,
+                0,
             )
             for t, path in self._tables.items()
         ]
         if not rows:
             return None
-        return spark.createDataFrame(rows)
+        return local_frame(
+            spark,
+            rows,
+            "file STRING, `table` STRING, path STRING, size BIGINT, `partition` BIGINT",
+        )
 
 
 class ParquetDirSource(_DirSource):

@@ -4,7 +4,8 @@ Reference: memdb/membtree static sources back system/introspection tables
 (/root/reference/models/serverctx.go:119-134,
  frontends/mysqlfe/build_show.go:46-64).
 
-Spark-first: `spark.createDataFrame(rows, schema)` — these tables are tiny
+Spark-first: committed rows become a `sqlutil.local_frame` (a JVM
+LocalRelation, read back without a Python worker) — these tables are tiny
 (system metadata), so they always broadcast in joins; no scale concern.
 Also the writable fixture store for DML tests (INSERT/UPDATE/DELETE
 semantics, reference backends/cassandra/sql_to_cql.go:246-394).
@@ -15,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from dataux_spark.sources.base import PushdownTier, Source, SourceMutator
+from dataux_spark.sqlutil import local_frame
 
 
 class MemorySource(Source):
@@ -57,12 +59,7 @@ class _MemoryMutator(SourceMutator):
     def _commit(self, df: DataFrame) -> None:
         from dataux_spark.sources.base import bounded_rows
 
-        rows = bounded_rows(df)
-        out = (
-            self.spark.createDataFrame(rows, df.schema)
-            if rows
-            else self.spark.createDataFrame([], df.schema)
-        )
+        out = local_frame(self.spark, bounded_rows(df), df.schema)
         self.src._tables[self.table] = out
         out.createOrReplaceTempView(self.table)
 

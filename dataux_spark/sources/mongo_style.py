@@ -54,6 +54,7 @@ from pyspark.sql.datasource import (
 from dataux_spark.sources.base import PushdownTier, filter_documents
 from dataux_spark.sources.docstore import DocStoreSource, split_filters
 from dataux_spark.sources.rest import fetch_docs
+from dataux_spark.sqlutil import local_frame
 
 # The Find()-expressible subset (sql_to_mgo.go:395-664). Note the contrast
 # with es_style._ACCEPTED: StringContains/StringEndsWith are IN (Mongo
@@ -154,8 +155,8 @@ class MongoStyleSource(DocStoreSource):
         alias = items[0][2] or "count(1)"  # Catalyst's default output name
         self._log(table, "agg", {"count": True,
                                  "filters": [[c, o, v] for c, o, v in filters]})
-        return spark.createDataFrame(
-            [(n,)], T.StructType([T.StructField(alias, T.LongType(), False)])
+        return local_frame(
+            spark, [(n,)], T.StructType([T.StructField(alias, T.LongType(), False)])
         )
 
     def writable(self) -> bool:

@@ -9,8 +9,8 @@ on top (SCAN_ONLY tier).
 Spark-first: fetch JSON (http(s):// or file:// for tests), infer the schema
 by sampling (infer.py — same sampled inference the document stores use),
 and materialize a DataFrame. Endpoint payloads are small control-plane
-listings (pods, segments), so driver-side fetch + createDataFrame is the
-right shape; a paginated big-data REST API would instead be a mapInPandas
+listings (pods, segments), so driver-side fetch + `sqlutil.local_frame` is
+the right shape; a paginated big-data REST API would instead be a mapInPandas
 fetcher over a partitioned key range.
 """
 
@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dataux_spark.infer import infer_from_documents
 from dataux_spark.sources.base import PushdownTier, Source
+from dataux_spark.sqlutil import local_frame
 
 
 def _fetch_json(url: str):
@@ -81,7 +82,7 @@ class RestJsonSource(Source):
             raise KeyError(f"unknown table {table!r} in source {self.name!r}")
         docs = self._docs(table)
         schema = infer_from_documents(docs, sample_n=len(docs) or 1)
-        # backtick-quote dotted names via Row dicts → createDataFrame
+        # positional rows in schema order: dotted names need no quoting
         cols = [f.name for f in schema.fields]
         rows = [tuple(d.get(c) for c in cols) for d in docs]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)

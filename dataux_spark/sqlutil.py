@@ -1,67 +1,75 @@
 """Small shared session helpers.
 
-The session-scoped metadata-cache pattern appears in multiple places
-(read_table, stream harness); it lives here once. So does the
-driver-literal VALUES frame (store-meta writers, r14).
+`local_frame` is the one way the engine turns rows held on the driver
+(pushed answers, SHOW/DESCRIBE/EXPLAIN output, fixture and metadata
+writes) into a DataFrame. It hands Spark an Arrow table, which PySpark
+plans as a JVM `LocalRelation` (`LocalTableScan`): executing it needs no
+Python worker. `spark.createDataFrame(<list>)` is backed by a Python RDD
+instead, and every task that computes it round-trips through a Python
+worker — about 1 s for a one-row answer, and ~4 s for a one-row
+`coalesce(1)` parquet write.
+
+The session-scoped metadata-cache pattern (read_table, stream harness)
+lives here too.
 """
 
 from __future__ import annotations
 
-import math
+
+def _arrow_storage(dt):
+    """Arrow type of `dt`'s internal (`toInternal`) values: timestamps and
+    day-time intervals are int64 microseconds, dates int32 days."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DayTimeIntervalType)):
+        return pa.int64()
+    if isinstance(dt, T.DateType):
+        return pa.int32()
+    if isinstance(dt, T.ArrayType):
+        return pa.list_(_arrow_storage(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return pa.map_(_arrow_storage(dt.keyType), _arrow_storage(dt.valueType))
+    if isinstance(dt, T.StructType):
+        return pa.struct(
+            [pa.field(f.name, _arrow_storage(f.dataType), f.nullable) for f in dt.fields]
+        )
+    return to_arrow_type(dt)
 
 
-def _sql_double(x: float) -> str:
-    """One double as a Spark SQL expression that parses back to the exact
-    same IEEE value: repr() is the shortest round-tripping decimal, and
-    DECIMAL -> DOUBLE casting yields the nearest double = the original.
-    NaN/Infinity have no decimal spelling, so those go through the string
-    cast Spark defines for them."""
-    x = float(x)
-    if math.isnan(x):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(x):
-        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
-    return f"CAST({x!r} AS DOUBLE)"
+def local_frame(spark, rows, schema):
+    """DataFrame of driver-held `rows` under `schema` (a StructType or a
+    DDL string), planned as a JVM LocalRelation.
 
+    Rows go through the same verification and conversion as
+    `spark.createDataFrame(rows, schema)`: a row that call rejects (an
+    int in a double column, a None in a non-nullable one) raises the same
+    error here, and a naive datetime is read as local time. The internal
+    values then become Arrow columns; -0.0, NaN, ±inf and None survive,
+    and zero rows give an empty frame with the schema. One difference: a
+    decimal with more fractional digits than its column's scale raises
+    here, where the list-built frame rounds it."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
-def values_frame(spark, rows: list[tuple], schema: list[tuple[str, str]]):
-    """Tiny driver-literal frame as a constant-folded VALUES SELECT (a JVM
-    LocalRelation) instead of spark.createDataFrame: a local-list frame is
-    Python-RDD-backed, so any task that computes it pays one Python-worker
-    round-trip PER PARENT PARTITION — a coalesce(1) parquet write of a
-    ONE-ROW meta frame serialized ~32 of those and measured ~4 s flat
-    (r14 store-build profile; jstack pinned the write task inside
-    PythonRunner reads), while the identical rows as a VALUES literal
-    write in ~0.15 s with no Python at execution. Same rows, same types.
-
-    schema: [(col_name, sql_type)] with sql_type one of
-    'double' | 'int' | 'bigint' | 'string' | 'array<double>'.
-    rows must be non-empty (VALUES has no zero-row spelling)."""
-    assert rows, "values_frame needs at least one row"
-
-    def cell(v, t: str) -> str:
-        if t == "double":
-            return _sql_double(v)
-        if t in ("int", "bigint"):
-            return f"CAST({int(v)} AS {t.upper()})"
-        if t == "string":
-            # escaping assumes the DEFAULT parser: with
-            # spark.sql.parser.escapedStringLiterals=true, \' stops
-            # escaping — callers binding untrusted strings under that
-            # conf should use parameterized spark.sql(..., args=...)
-            # (the bm25/cms probe pattern) instead
-            s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{s}'"
-        if t == "array<double>":
-            return f"ARRAY({', '.join(_sql_double(x) for x in v)})"
-        raise ValueError(f"unsupported values_frame type: {t}")
-
-    vals = ", ".join(
-        "(" + ", ".join(cell(v, t) for v, (_, t) in zip(r, schema)) + ")"
-        for r in rows
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    verify = T._make_type_verifier(schema)
+    convert = T._create_converter(schema)
+    internal = []
+    for r in rows:
+        verify(r)
+        internal.append(schema.toInternal(convert(r)))
+    columns = list(zip(*internal)) if internal else [() for _ in schema.fields]
+    arrays = []
+    for values, f in zip(columns, schema.fields):
+        arr = pa.array(values, type=_arrow_storage(f.dataType))
+        arrays.append(arr.cast(to_arrow_type(f.dataType)))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=to_arrow_schema(schema)), schema
     )
-    cols = ", ".join(name for name, _ in schema)
-    return spark.sql(f"SELECT {cols} FROM (VALUES {vals}) AS t({cols})")
 
 
 def session_cache(spark, attr: str) -> dict:

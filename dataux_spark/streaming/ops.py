@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dataux_spark.sqlutil import session_cache, values_frame
+from dataux_spark.sqlutil import local_frame, session_cache
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (file source = the local stand-in
@@ -769,11 +769,9 @@ def streaming_quantile_ingest(
     Writes the one-row meta frame once at setup; returns the handle."""
     spark = stream.sparkSession
     span = (float(vmax) - float(vmin)) or 1.0
-    # VALUES literal, not createDataFrame (r14) — same row/schema, skips
-    # the RDD-backed write's per-partition Python round-trips (sqlutil).
-    values_frame(
-        spark, [(float(vmin), float(vmax), int(bins))],
-        [("vmin", "double"), ("vmax", "double"), ("bins", "int")],
+    # a LocalRelation meta frame: its write runs no Python worker (sqlutil)
+    local_frame(
+        spark, [(float(vmin), float(vmax), int(bins))], "vmin double, vmax double, bins int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{rollup_path}/meta")
 
     def _hist(bdf: DataFrame, batch_id: int) -> None:

@@ -414,6 +414,18 @@ CHECKS = {
          lambda p: "CartesianProduct" not in p
          and "BroadcastNestedLoopJoin" not in p),
     ],
+    # a source's pushed answer is an Arrow-backed LocalRelation
+    # (sqlutil.local_frame): returning it runs no Python worker
+    **{
+        name: [("pushed answer is a LocalTableScan, not a Python RDD",
+                lambda p: "LocalTableScan" in p and "ExistingRDD" not in p)]
+        for name in (
+            "pushdown_mongo_filter_topk",
+            "pushdown_es_group_agg",
+            "pushdown_cass_key_topk",
+            "pushdown_datastore_ineq_topk",
+        )
+    },
 }
 
 
