@@ -627,6 +627,7 @@ class Engine:
             return show_plans.show_tables(self.spark, schema_name, tables)
         m = self._SHOW_COLUMNS_RE.match(s)
         if m:
+            self._refresh_views({m.group(2).lower()})
             out = show_plans.describe(self.spark, m.group(2), full=bool(m.group(1)))
             if m.group(3) is not None:  # LIKE filters column names
                 out = out.filter(F.col("Field").like(m.group(3)))
@@ -648,6 +649,7 @@ class Engine:
             )
         m = self._SHOW_CREATE_RE.match(s)
         if m:
+            self._refresh_views({m.group(1).lower()})
             return show_plans.show_create_table(
                 self.spark, m.group(1), self.store.constraints(m.group(1))
             )
@@ -682,6 +684,7 @@ class Engine:
             )
         m = self._DESCRIBE_RE.match(s)
         if m:
+            self._refresh_views({m.group(1).lower()})
             return show_plans.describe(self.spark, m.group(1), full=False)
         # anything else (SHOW FUNCTIONS, DESCRIBE QUERY ...): Spark-native
         return self.spark.sql(s)
@@ -797,14 +800,21 @@ class Engine:
         return None
 
     def _refresh_pushdown_views(self, stmt: str) -> None:
-        """Re-register a FRESH relation for every referenced table of a
-        Python-DataSource-backed source. Spark caches a relation's first
-        built scan (reader + partitions with pushed filters baked in) and
-        reuses it for later filterless queries — without this refresh, a
-        plain scan issued after a filtered one silently replays the old
-        filters (see Source.fresh_scan_per_query). load() is lazy; the cost
-        is a temp-view registration."""
-        refs = {t.strip("`").lower() for t in _TABLE_REF_RE.findall(stmt)}
+        """Re-register a FRESH relation for every table the statement reads
+        FROM or JOINs of a ``fresh_scan_per_query`` source, before any
+        pushdown tier runs. A relation is never reused across statements:
+        Spark replays the pushed filters baked into its first built scan,
+        so a reused doc-store relation answered a plain ``count(*)`` over
+        1,500 documents with the 67 rows of the previous statement's
+        ``c_nationkey = 3`` filter (Spark 4.1). The fresh load also keeps
+        the schema exact for the dialect rewrite. Its cost is the source's
+        ``load()``: for the doc stores, one driver-side fetch and schema
+        inference (no Python planner worker) plus the view registration."""
+        self._refresh_views({t.strip("`").lower() for t in _TABLE_REF_RE.findall(stmt)})
+
+    def _refresh_views(self, refs: set[str]) -> None:
+        """Re-register the named tables of ``fresh_scan_per_query`` sources
+        (SELECT, DESCRIBE, SHOW COLUMNS and SHOW CREATE TABLE)."""
         if not refs:
             return
         for s in self.sources.values():

@@ -372,10 +372,8 @@ def scan_parallelize(df: DataFrame, factor: int = 1) -> DataFrame:
          scan short-circuits here.
       2. file-backed frames below the file-count bar estimate the scan
          width with Spark's own split-packing math over the real file
-         sizes (FilePartition.maxSplitBytes: bytesPerCore from
-         minPartitionNum/defaultParallelism, clamped by
-         maxPartitionBytes/openCost) — local stat calls for local paths,
-         Hadoop FileSystem status calls for any other scheme
+         sizes (_estimated_scan_splits) — local stat calls for local
+         paths, Hadoop FileSystem status calls for any other scheme
          (_scan_file_sizes, r14), no JVM plan work. The estimate
          reproduces the scan's split count; it cannot see post-scan
          repartition/coalesce operators, but a wrong call in either
@@ -383,8 +381,6 @@ def scan_parallelize(df: DataFrame, factor: int = 1) -> DataFrame:
          little parallelism — never a row.
       3. only non-file-backed frames (createDataFrame test corpora)
          still pay the exact `rdd.getNumPartitions()` probe."""
-    import math
-
     spark = df.sparkSession
     sc = spark.sparkContext
     target = sc.defaultParallelism * factor
@@ -397,35 +393,41 @@ def scan_parallelize(df: DataFrame, factor: int = 1) -> DataFrame:
         return df
     if files:
         try:
-            sizes = _scan_file_sizes(spark, files)
-            def _bytes_conf(key: str, default: int) -> int:
-                v = spark.conf.get(key, str(default))
-                units = {"k": 1024, "m": 1024**2, "g": 1024**3,
-                         "t": 1024**4, "p": 1024**5, "b": 1}
-                v = v.lower().rstrip("b")
-                return int(float(v[:-1]) * units[v[-1]]) if v[-1] in units else int(v)
-            max_pb = _bytes_conf("spark.sql.files.maxPartitionBytes", 128 * 1024**2)
-            open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4 * 1024**2)
-            # bytesPerCore divides by minPartitionNum (default: the
-            # session's defaultParallelism), exactly as FilePartition
-            # does — NOT by `target`: for factor>1 callers dividing by
-            # target under-stated maxSplitBytes and over-stated the real
-            # split count, skipping a needed repartition (ADVICE r13).
-            # `target` stays the >=-comparison bar only.
-            min_pn = int(spark.conf.get(
-                "spark.sql.files.minPartitionNum", str(sc.defaultParallelism)
-            ))
-            bytes_per_core = (sum(sizes) + open_cost * len(sizes)) / max(min_pn, 1)
-            # floor 1 byte: openCostInBytes=0 on an all-empty file set
-            # would otherwise divide by zero below
-            max_split = max(1, min(max_pb, max(open_cost, int(bytes_per_core))))
-            est = sum(math.ceil(s / max_split) if s else 1 for s in sizes)
+            est = _estimated_scan_splits(spark, _scan_file_sizes(spark, files))
             return df if est >= target else df.repartition(target)
         except Exception:  # noqa: BLE001 — any estimate failure (storage
             pass  # stat error, exotic conf spelling): exact probe below
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def _estimated_scan_splits(spark, sizes: list[int]) -> int:
+    """The split count of a file scan over files of ``sizes`` bytes, by
+    Spark's FilePartition.maxSplitBytes: bytesPerCore divides by
+    minPartitionNum, which falls back to spark.sql.leafNodeDefaultParallelism
+    and then the context's defaultParallelism."""
+    import math
+
+    def _bytes_conf(key: str, default: int) -> int:
+        v = spark.conf.get(key, str(default))
+        units = {"k": 1024, "m": 1024**2, "g": 1024**3,
+                 "t": 1024**4, "p": 1024**5, "b": 1}
+        v = v.lower().rstrip("b")
+        return int(float(v[:-1]) * units[v[-1]]) if v[-1] in units else int(v)
+
+    max_pb = _bytes_conf("spark.sql.files.maxPartitionBytes", 128 * 1024**2)
+    open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4 * 1024**2)
+    min_pn = int(
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    bytes_per_core = (sum(sizes) + open_cost * len(sizes)) / max(min_pn, 1)
+    # floor 1 byte: openCostInBytes=0 on an all-empty file set would
+    # otherwise divide by zero below
+    max_split = max(1, min(max_pb, max(open_cost, int(bytes_per_core))))
+    return sum(math.ceil(s / max_split) if s else 1 for s in sizes)
 
 
 def _scan_file_sizes(

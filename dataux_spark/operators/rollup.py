@@ -523,6 +523,32 @@ def topk_rollup_frame(
     return truncate_topk(counts, capacity).withColumn("bucket_date", F.to_date("bucket"))
 
 
+#: Below this k a top-k's per-task buffer (about 2k references) is small,
+#: so summary_limit reads no footers.
+_TOPK_BOUND_FROM = 100_000
+
+
+def summary_limit(summaries: DataFrame, k: int) -> int:
+    """The ``limit`` for a top-k over merged heavy-hitter summaries.
+    Spark's TakeOrderedAndProject sizes each task's buffer by k, so
+    k=10**9 asks for gigabytes of heap. A k of at least _TOPK_BOUND_FROM
+    is clamped to the rows in the parquet files ``summaries`` scans — an
+    upper bound on the merged item count, summed from the file footers
+    without a Spark job. Smaller k is returned as is, so those plans keep
+    their literal limit."""
+    if k < _TOPK_BOUND_FROM:
+        return k
+    import pyarrow.parquet as pq
+    from pyarrow import fs
+
+    rows = 0
+    for uri in summaries.inputFiles():
+        filesystem, path = fs.FileSystem.from_uri(uri)
+        with filesystem.open_input_file(path) as fh:
+            rows += pq.ParquetFile(fh).metadata.num_rows
+    return min(k, rows)
+
+
 def topk_over_range(
     spark: SparkSession,
     rollup_path: str,
@@ -560,7 +586,7 @@ def topk_over_range(
             .alias("est_max"),
         )
         .orderBy(F.col("est_min").desc(), "item")
-        .limit(k)
+        .limit(summary_limit(r, k))
     )
 
 

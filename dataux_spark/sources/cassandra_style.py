@@ -124,7 +124,7 @@ class CassandraStyleSource(DocStoreSource):
         # the literal's Python type — a numeric literal against a string
         # key column must decline (reference rule :552-556). Only range
         # predicates need the schema sample.
-        numeric = _numeric_cols(infer_from_documents(docs(), sample_n=self.schema_sample))
+        numeric = _numeric_cols(self.infer_schema(docs()))
         return any(col not in numeric for col in ranged)
 
     # ------------------------------------------------------------- writes

@@ -55,6 +55,7 @@ from pyspark.sql.datasource import (
     StringEndsWith,
     StringStartsWith,
 )
+from pyspark.sql.types import StructType
 
 from dataux_spark.infer import SAMPLE_N, infer_from_documents
 from dataux_spark.sources.base import (
@@ -194,8 +195,11 @@ class DocStoreDataSource(DataSource):
         return cls.backend.format
 
     def schema(self):
-        docs = fetch_docs(self.options["url"])
-        return infer_from_documents(docs, sample_n=self.backend.schema_sample or len(docs))
+        """The bare-format path only (``spark.read.format(fmt).load()``
+        with no schema): ``DocStoreSource.load`` infers on the driver and
+        passes the schema, so Spark never calls this there. Both go
+        through ``DocStoreSource.infer_schema``."""
+        return self.backend.infer_schema(fetch_docs(self.options["url"]))
 
     def reader(self, schema):
         return DocStoreReader(self.backend, schema, self.options)
@@ -251,6 +255,14 @@ class DocStoreSource(Source):
     # ------------------------------------------------------- shared body
 
     @classmethod
+    def infer_schema(cls, docs: list) -> StructType:
+        """A table's schema from its fetched documents: the first
+        ``schema_sample`` of them, or all when it is None. The one
+        inference every path uses — ``load()``, the bare-format
+        ``DocStoreDataSource.schema()`` and cassandra's top-k gate."""
+        return infer_from_documents(docs, sample_n=cls.schema_sample or len(docs))
+
+    @classmethod
     def _ensure_format(cls, spark: SparkSession) -> None:
         key = (cls.format, id(spark))
         if key not in DocStoreSource._registered_sessions:
@@ -272,7 +284,11 @@ class DocStoreSource(Source):
                    **self._scan_options(table)}
         if self.push_log_dir:
             options["push_log_dir"] = self.push_log_dir
-        return spark.read.format(self.format).options(**options).load()
+        # the schema is inferred here, on the driver: without it Spark
+        # starts a Python planner worker to run DocStoreDataSource.schema()
+        # on every load (~250 ms)
+        schema = self.infer_schema(fetch_docs(options["url"]))
+        return spark.read.format(self.format).options(**options).schema(schema).load()
 
     def _log(self, table: str, kind: str, record: dict) -> None:
         if self.push_log_dir:

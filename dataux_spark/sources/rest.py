@@ -17,6 +17,7 @@ fetcher over a partitioned key range.
 from __future__ import annotations
 
 import json
+import urllib.error
 import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,8 +28,12 @@ from dataux_spark.sqlutil import local_frame
 
 
 def _fetch_json(url: str):
-    with urllib.request.urlopen(url) as resp:  # supports file:// and http(s)://
-        payload = json.load(resp)
+    try:
+        with urllib.request.urlopen(url) as resp:  # supports file:// and http(s)://
+            payload = json.load(resp)
+    except urllib.error.URLError as e:
+        # a refused connection's own message omits the endpoint
+        raise urllib.error.URLError(f"{url}: {e.reason}") from e
     if isinstance(payload, dict):
         # k8s-style list responses: {"items": [...]}
         for key in ("items", "data", "results", "rows"):

@@ -415,6 +415,8 @@ def merged_topk(spark: SparkSession, rollup_path: str, k: int = 10) -> DataFrame
     mergeable-summary guarantee carries over: any item whose true count
     exceeds the summed dropped bound is present. Work is proportional to
     buckets x batches x capacity, never raw events."""
+    from dataux_spark.operators.rollup import summary_limit
+
     r = spark.read.option("basePath", rollup_path).parquet(
         f"{rollup_path}/ingest_batch=*"
     )
@@ -436,7 +438,7 @@ def merged_topk(spark: SparkSession, rollup_path: str, k: int = 10) -> DataFrame
             .alias("est_max"),
         )
         .orderBy(F.col("est_min").desc(), "item")
-        .limit(k)
+        .limit(summary_limit(r, k))
     )
 
 

@@ -501,6 +501,40 @@ def test_scan_file_sizes_hadoop_tier_matches_local(spark, docs):
     assert all(s > 0 for s in via_hadoop)
 
 
+def test_scan_split_estimate_follows_leaf_node_parallelism(spark, tmp_path):
+    """With spark.sql.files.minPartitionNum unset, FilePartition divides
+    the scan bytes by spark.sql.leafNodeDefaultParallelism when it is set,
+    else by defaultParallelism; the estimate must do the same and match
+    the scan's real partition count either way."""
+    path = str(tmp_path / "one_file")
+    (
+        spark.range(20_000)
+        .selectExpr("id", "sha2(cast(id AS string), 256) AS h")
+        .coalesce(1)
+        .write.parquet(path)
+    )
+    sizes = dedup._scan_file_sizes(spark, spark.read.parquet(path).inputFiles())
+    assert len(sizes) == 1 and sizes[0] > 100_000
+    keys = ("spark.sql.files.openCostInBytes", "spark.sql.leafNodeDefaultParallelism")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        # a small open cost lets bytesPerCore, not the open cost, set the split
+        spark.conf.set("spark.sql.files.openCostInBytes", "1024")
+        spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+        by_default = dedup._estimated_scan_splits(spark, sizes)
+        assert by_default == spark.read.parquet(path).rdd.getNumPartitions()
+        spark.conf.set("spark.sql.leafNodeDefaultParallelism", "3")
+        by_leaf = dedup._estimated_scan_splits(spark, sizes)
+        assert by_leaf == spark.read.parquet(path).rdd.getNumPartitions()
+        assert by_leaf != by_default
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_simhash_md5_twin_near_dup_properties(spark):
     """The oracle-checkable md5 twin must behave like a simhash: identical
     docs hash identically, a small edit flips few of the 60 bits, and an
